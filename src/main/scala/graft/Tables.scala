@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
 object Tables {
 
   /** Per-path scan METADATA memo: the inferred schema and the
-    * [[parallelized]] repartition decision, fingerprinted by the file
+    * [[tooFewSplits]] repartition decision, fingerprinted by the file
     * listing (name, length, mtime of every part file).
     *
     * Why: every `spark.read.parquet(path)` call pays schema inference (a
@@ -62,31 +62,33 @@ object Tables {
     if (spark.conf.get("spark.graft.parallelizeInputs", "true") != "true")
       return spark.read.parquet(path)
     val target = spark.sparkContext.defaultParallelism
-    listingFingerprint(spark, path) match {
-      case None => parallelized(spark, spark.read.parquet(path))
+    val (df, spread) = listingFingerprint(spark, path) match {
+      case None =>
+        val df0 = spark.read.parquet(path)
+        (df0, tooFewSplits(df0, target))
       case Some(fp) =>
         val key = s"$target|$path"
         val cached = Option(loadMemo.get(key)).filter(_.fingerprint == fp)
         val meta = cached.getOrElse {
           val df0 = spark.read.parquet(path)
-          val m = LoadMeta(df0.schema,
-            df0.rdd.getNumPartitions < math.max(2, target / 2), fp)
+          val m = LoadMeta(df0.schema, tooFewSplits(df0, target), fp)
           loadMemo.put(key, m)
           m
         }
-        val df = spark.read.schema(meta.schema).parquet(path)
-        if (meta.repartition) df.repartition(target) else df
+        (spark.read.schema(meta.schema).parquet(path), meta.repartition)
     }
+    if (spread) df.repartition(target) else df
   }
 
   /** Input parallelization guard: the driver-generated test parquet is one
     * file with ONE row group, so the scan plans a single input partition and
     * every CPU-heavy projection downstream runs single-threaded (measured:
     * 6 s for minhash signatures at sf0.1 on 32 idle cores). When the scan
-    * yields fewer splits than the session's parallelism, redistribute once
-    * up front; with production inputs (many files / row groups) this is a
-    * no-op. Filters still reach the parquet scan — Catalyst pushes
-    * predicates and pruning through round-robin repartition.
+    * yields fewer splits than the session's parallelism, [[load]]
+    * redistributes once up front; with production inputs (many files / row
+    * groups) this is a no-op. Filters still reach the parquet scan —
+    * Catalyst pushes predicates and pruning through round-robin
+    * repartition.
     *
     * TESTDATA-ONLY workaround, gated by `spark.graft.parallelizeInputs`
     * (default true): the round-robin redistribute DESTROYS any deliberate
@@ -94,13 +96,8 @@ object Tables {
     * read with the conf set to `false` (or through its catalog table, which
     * does not pass here) or its zero-exchange join layout is lost.
     */
-  private def parallelized(spark: SparkSession, df: DataFrame): DataFrame = {
-    if (spark.conf.get("spark.graft.parallelizeInputs", "true") != "true") df
-    else {
-      val target = spark.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions < math.max(2, target / 2)) df.repartition(target) else df
-    }
-  }
+  private def tooFewSplits(df: DataFrame, target: Int): Boolean =
+    df.rdd.getNumPartitions < math.max(2, target / 2)
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -14,10 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  /** K1 (`script/main.py:377-384`): gzip JSON export. The reference writes
-    * the nested-struct frame (built by `Reshape.nestSchema`); nesting is the
-    * caller's choice — this sink only owns format/compression/layout.
-    */
   /** Both file sinks write timestamps at FULL microsecond precision: the
     * Spark default format truncates to milliseconds, silently making the
     * file exports disagree with the parquet table on any event-time column
@@ -26,6 +22,10 @@ object Sinks {
     */
   private val losslessTs = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
+  /** K1 (`script/main.py:377-384`): gzip JSON export. The reference writes
+    * the nested-struct frame (built by `Reshape.nestSchema`); nesting is the
+    * caller's choice — this sink only owns format/compression/layout.
+    */
   def gzipJson(df: DataFrame, path: String, singleFile: Boolean = true): Unit =
     (if (singleFile) df.coalesce(1) else df)
       .write.mode("overwrite").option("compression", "gzip")

@@ -1,21 +1,19 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.io.{JobConfig, Sinks}
 import graft.ops.Reshape
 
 /** Job orchestration (SURVEY §3.3; reference `script/main.py:221-418`):
-  * source loads → CDC repair (cached, shared) → per-iteration stages with
+  * the consume stages composed by [[ConsumePipeline.compose]], with the
   * per-iteration JSON + CSV exports → accumulated union → final partitioned
   * parquet write with delete-insert semantics (K3).
   *
   * Mirrors the reference's action schedule: the two per-iteration exports
   * materialize inside the loop; the accumulated union materializes once at
-  * the final write. `BaseDataFirst` (stage 1) stays cached only while its
-  * iteration runs (`script/main.py:324,370`).
+  * the final write. Every stage cache — the hoisted stage 1 included —
+  * lives until after that write, then is released.
   */
 object ConsumeJob {
 
@@ -42,41 +40,15 @@ object ConsumeJob {
           params: ConsumeParams = ConsumeParams(),
           cfg: Option[JobConfig] = None,
           dateSegment: Option[String] = None): DataFrame = {
-    val events = Tables.events(spark, dir).cache()
-    val customer = Tables.customer(spark, dir)
-    val orders = Tables.orders(spark, dir)
-    val nation = Tables.nation(spark, dir)
-
-    val repaired = ConsumePipeline.repairCdc(events).cache()
-    val side = ConsumePipeline.SideInputs(orders, events,
-      params.activityFrom, params.activityTo).cache()
-
-    // stage 1 hoisted out of the loop — iteration filters are per-user
-    // predicates over the user-keyed window, see ConsumePipeline.build;
-    // the user_id alignment rides the same computation (alignRepaired)
-    val base1All = ConsumePipeline.baseFirst(
-      ConsumePipeline.alignRepaired(repaired), customer).cache()
-
-    val perIteration = params.iterations.map { it =>
-      val b1 = base1All.filter(it.filter)
-      // stage 3 + both exports read base2 repeatedly — cached; the filter
-      // and broadcast joins preserve base1All's user_id layout
-      val b2 = ConsumePipeline.enrich(b1, side).cache()
-      val b3raw = ConsumePipeline.baseFinal(b2, params.monthStart, params.monthEnd)
-      // config-driven base-data drop (`script/main.py:349-351`) — BEFORE
-      // modify, so the accumulated table loses the columns too
-      val b3 = cfg.filter(_.colsToDropBaseData.nonEmpty)
-        .fold(b3raw)(c => Reshape.dropPaths(b3raw, c.colsToDropBaseData))
-      // geoDropColumns drops INSIDE modify (`script/main.py:186`) — after
-      // the geo join, BEFORE the partition column — shaping the accumulated
-      // table and every export without ever touching partition_month
-      val out = ConsumePipeline.modify(b3, nation,
-          cfg.map(_.geoDropColumns).getOrElse(Nil))
-        .withColumn("iteration", lit(it.name))
-
-      // date-keyed export layout (`script/main.py:377-393`)
-      val dateKey = dateSegment.fold("")(d => s"/partitioncreateddate=$d")
-      cfg match {
+    // date-keyed export layout (`script/main.py:377-393`)
+    val dateKey = dateSegment.fold("")(d => s"/partitioncreateddate=$d")
+    // config-driven drops (`script/main.py:186,349-351`): the base-data drop
+    // before modify and the geo drop inside it shape the accumulated table
+    // AND both exports
+    val job = ConsumePipeline.compose(spark, dir, params,
+      baseDataDrop = cfg.fold(Seq.empty[String])(_.colsToDropBaseData),
+      geoDrop = cfg.fold(Seq.empty[String])(_.geoDropColumns),
+      each = (name, out) => cfg match {
         case Some(c) =>
           // config-driven export shapes (`script/main.py:372-393`): one
           // common drop list for both file exports; the JSON branch
@@ -84,34 +56,21 @@ object ConsumeJob {
           val exportBase = Reshape.dropPaths(out, c.colsToDropJson)
           val json = Reshape.nestSchema(Reshape.dropPrefixedExcept(
             exportBase, c.jsonDropPrefixes, c.colsToKeep.toSet))
-          Sinks.gzipJson(json, s"$outDir/json/${it.name}$dateKey")
-          Sinks.gzipCsv(exportBase, s"$outDir/csv/${it.name}$dateKey")
+          Sinks.gzipJson(json, s"$outDir/json/$name$dateKey")
+          Sinks.gzipCsv(exportBase, s"$outDir/csv/$name$dateKey")
         case None =>
           // K1: nested gzip JSON export (flat names re-nested on '_', F8).
           val json = Reshape.nestSchema(out.select("user_id", "event_type",
             "price_src", "partition_month", "n_name", "n_clicks", "n_views"))
-          Sinks.gzipJson(json, s"$outDir/json/${it.name}$dateKey")
+          Sinks.gzipJson(json, s"$outDir/json/$name$dateKey")
           // K2: flat gzip CSV export.
-          Sinks.gzipCsv(out.drop("props"), s"$outDir/csv/${it.name}$dateKey")
-      }
+          Sinks.gzipCsv(out.drop("props"), s"$outDir/csv/$name$dateKey")
+      })
 
-      // The reference unpersists BaseDataFirst here; the accumulated union
-      // then recomputes stage-1 lineage at the final write
-      // (`script/main.py:370`, SURVEY §3.3) — an accepted cost there, but
-      // pure waste, so the hoisted stage-1 cache lives until after the
-      // final action.
-      (out, b2)
-    }
-
-    val union = perIteration.map(_._1).reduce(_ unionByName _)
+    val union = job.frames.map(_._2).reduce(_ unionByName _)
     // K3: delete-insert of the month partitions present in the result.
     Sinks.overwritePartitions(union, s"$outDir/table", "partition_month")
-
-    perIteration.foreach(_._2.unpersist())
-    base1All.unpersist()
-    side.unpersist()
-    repaired.unpersist()
-    events.unpersist()
+    job.release()
     union
   }
 }

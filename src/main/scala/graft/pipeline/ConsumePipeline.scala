@@ -88,20 +88,6 @@ object ConsumePipeline {
       Seq("user_id"))
   }
 
-  /** Stage 2 (`2-basedata_df_query.sql`): activity filter (J3, ids made
-    * unique so the inner join is a pure filter) + argmax control join (J4/A1)
-    * + two counter joins (J5/A2/A3).
-    */
-  def baseEnriched(
-      base: DataFrame,
-      orders: DataFrame,
-      events: DataFrame,
-      activityFrom: String,
-      activityTo: String): DataFrame = {
-    val s = SideInputs(orders, events, activityFrom, activityTo)
-    enrich(base, s)
-  }
-
   /** The loop-invariant stage-2 side inputs — the activity id set and the
     * per-user event statistics depend only on the sources and the date
     * window, never on the iteration, so the orchestrators compute (and
@@ -158,12 +144,15 @@ object ConsumePipeline {
     * b2 caches aligned FOR FREE, and stage 3 stays shuffle-free
     * (PlanAuditSpec pins it). Net plan: 1 REPARTITION_BY_COL total where
     * there were 1 ENSURE + one REPARTITION_BY_COL per iteration.
-    * Callers own the unpersist of whatever they cache downstream.
     */
   def alignRepaired(repaired: DataFrame): DataFrame =
     repaired.repartition(col("user_id"))
 
-  /** Stage 2 body given precomputed side inputs. */
+  /** Stage 2 (`2-basedata_df_query.sql`): activity filter (J3, ids made
+    * unique so the inner join is a pure filter) + one left join of the
+    * fused per-user statistics (control argmax J4/A1, counters J5/A2/A3)
+    * precomputed by [[SideInputs]].
+    */
   def enrich(base: DataFrame, side: SideInputs): DataFrame = {
     val filtered = Joins.innerActivityFilter(base, side.active, Seq("user_id"))
     filtered
@@ -214,21 +203,49 @@ object ConsumePipeline {
       .withColumn("partition_month", date_format(col("ts"), "yyyy-MM"))
   }
 
-  private[pipeline] val outputCols = Seq("user_id", "event_type", "ts", "value",
+  private[graft] val outputCols = Seq("user_id", "event_type", "ts", "value",
     "last_signup_value", "n_clicks", "click_value", "n_views", "c_name",
     "c_mktsegment", "price_src", "geoid", "n_name", "partition_month",
     "iteration")
 
-  /** Full composed pipeline as one lazy DataFrame (no sinks): stage 0 cached
-    * and shared across iterations (C1), stage 1 cached within each iteration
-    * (the reference's `BaseDataFirst` cache), results union-accumulated (U3).
+  /** One composition's per-iteration frames (iteration name and frame, in
+    * loop order) and the release of every block [[compose]] cached.
     */
-  def build(spark: SparkSession, dir: String,
-            params: ConsumeParams = ConsumeParams()): DataFrame = {
-    // The CDC stream feeds the repair (two filtered branches) and the fused
-    // side aggregation — cache it so each consumer reads memory, not the
-    // source scan. (C1: the reference caches the same table,
-    // `script/main.py:125`.)
+  final case class Composed(frames: Seq[(String, DataFrame)], release: () => Unit)
+
+  /** The consume stages composed ONCE, for both entry points ([[build]] and
+    * [[ConsumeJob.run]]) — the only place that caches and releases their
+    * frames.
+    *
+    * Cached for the whole job: the CDC stream (the repair's two branches
+    * and the fused side aggregation read it; C1, `script/main.py:125`),
+    * the repaired stream, the [[SideInputs]], and `base1All` — stage 1
+    * computed ONCE over the [[alignRepaired]] stream. Stage 1 is
+    * iteration-INVARIANT: the day-dedup window partitions by user_id and
+    * every iteration filter is a per-user predicate, so filtering before or
+    * after the window is equivalent (the reference re-runs stage 1 per loop
+    * pass, `script/main.py:305-324`). Per iteration, `b2` (stage 2 over the
+    * filtered `base1All`) is cached too: stage 3 reads it four times and
+    * the exports again; the filter and the broadcast side joins preserve
+    * `base1All`'s user_id layout, so it lands aligned with no per-iteration
+    * exchange.
+    *
+    * The reference unpersists BaseDataFirst inside its loop, so its
+    * accumulated union recomputes stage-1 lineage at the final write
+    * (`script/main.py:324,370`, SURVEY §3.3). Here every cache lives until
+    * the caller's last action; `release` then drops them all.
+    *
+    * `baseDataDrop` (dotted paths allowed) drops from the stage-3 result
+    * BEFORE `modify`; `geoDrop` drops inside [[modify]]. `each` runs the
+    * caller's per-iteration actions on each frame as soon as it is
+    * composed, like the reference's loop body (`script/main.py:305-393`):
+    * `.cache()` plans the cached frame when it is called, from the
+    * statistics of whatever is materialised by then, so the next
+    * iteration's `b2` must be cached after this iteration's actions ran.
+    */
+  def compose(spark: SparkSession, dir: String, params: ConsumeParams,
+              baseDataDrop: Seq[String] = Nil, geoDrop: Seq[String] = Nil,
+              each: (String, DataFrame) => Unit = (_, _) => ()): Composed = {
     val events = Tables.events(spark, dir).cache()
     val customer = Tables.customer(spark, dir)
     val orders = Tables.orders(spark, dir)
@@ -236,75 +253,31 @@ object ConsumePipeline {
 
     val repaired = repairCdc(events).cache()
     val side = SideInputs(orders, events, params.activityFrom, params.activityTo).cache()
-    // Stage 1 is iteration-INVARIANT: the day-dedup window partitions by
-    // user_id and every iteration filter is a per-user predicate, so
-    // filtering before or after the window is equivalent — compute the
-    // window + enrichment join ONCE and filter the cached result per
-    // iteration (the reference re-runs stage 1 per loop pass,
-    // `script/main.py:305-324`; that doubles the most expensive window).
-    // The user_id alignment is hoisted into this one computation (see
-    // alignRepaired): everything downstream inherits the layout.
     val base1All = baseFirst(alignRepaired(repaired), customer).cache()
-    params.iterations.map { it =>
-      val b1 = base1All.filter(it.filter)
-      // cached: stage 3 reads base2 four times; the filter and the
-      // broadcast side joins preserve base1All's user_id layout, so the
-      // cache lands aligned with no per-iteration exchange (alignRepaired)
-      val b2 = enrich(b1, side).cache()
+    val perIteration = params.iterations.map { it =>
+      val b2 = enrich(base1All.filter(it.filter), side).cache()
       val b3 = baseFinal(b2, params.monthStart, params.monthEnd)
-      modify(b3, nation)
-        .withColumn("iteration", lit(it.name))
-        .select(outputCols.map(col): _*)
-    }.reduce(_ unionByName _)
+      val kept = if (baseDataDrop.isEmpty) b3 else Reshape.dropPaths(b3, baseDataDrop)
+      val out = modify(kept, nation, geoDrop).withColumn("iteration", lit(it.name))
+      each(it.name, out)
+      (it.name, out, b2)
+    }
+    Composed(perIteration.map { case (name, out, _) => (name, out) }, () => {
+      perIteration.foreach(_._3.unpersist())
+      base1All.unpersist()
+      side.unpersist()
+      repaired.unpersist()
+      events.unpersist()
+    })
   }
 
-  /** [[build]] under the 100 TB BUCKETED posture: the loop-hoisted stage-1
-    * frame lands ONCE as a catalog table bucketed + sorted on `user_id`
-    * ([[graft.io.Sinks.writeBucketed]]) and every iteration reads it back
-    * with the bucket layout AS the alignment — the swap for when the
-    * working set no longer fits executor storage (the reference's cache
-    * points, `script/main.py:125,324`, assume it does; `.cache()` past
-    * memory degrades to disk-spilled blocks with none of a bucketed
-    * table's pruning or co-partitioning).
-    *
-    * Two deltas from [[build]], both plan-visible (PlanAuditSpec pins
-    * them; the rehearsal tool measures them at sf1/sf10):
-    *
-    *  - `base1All.cache()` → `writeBucketed(..., "user_id", numBuckets)`:
-    *    iterations scan the bucketed table; the scan's HashPartitioning
-    *    on user_id satisfies every downstream user_id requirement, so the
-    *    base side reaches stage 3's windows with ZERO exchanges;
-    *  - [[alignRepaired]]'s `repartition(user_id)` is DROPPED: the
-    *    alignment it pays one exchange for arrives free with the bucket
-    *    layout (the cache stays, so stage 3's four reads still share one
-    *    enrichment).
-    *
-    * Output is row-identical to [[build]] (the pipe_consume oracles hold
-    * for both). Callers own the table's lifecycle (`DROP TABLE` when
-    * done).
+  /** Full composed pipeline as one lazy DataFrame (no sinks): [[compose]]'s
+    * frames projected to [[outputCols]] and union-accumulated (U3). Its
+    * caches stay registered, so repeated actions on the result reuse them.
     */
-  def buildBucketed(spark: SparkSession, dir: String,
-                    params: ConsumeParams = ConsumeParams(),
-                    table: String = "graft_consume_base1",
-                    numBuckets: Int = 32): DataFrame = {
-    val events = Tables.events(spark, dir).cache()
-    val customer = Tables.customer(spark, dir)
-    val orders = Tables.orders(spark, dir)
-    val nation = Tables.nation(spark, dir)
-    val repaired = repairCdc(events).cache()
-    val side = SideInputs(orders, events, params.activityFrom,
-      params.activityTo).cache()
-    graft.io.Sinks.writeBucketed(baseFirst(repaired, customer), table,
-      "user_id", numBuckets)
-    val base1All = spark.table(table)
-    params.iterations.map { it =>
-      val b1 = base1All.filter(it.filter)
-      // bucket layout = alignment: no repartition, cache only
-      val b2 = enrich(b1, side).cache()
-      val b3 = baseFinal(b2, params.monthStart, params.monthEnd)
-      modify(b3, nation)
-        .withColumn("iteration", lit(it.name))
-        .select(outputCols.map(col): _*)
-    }.reduce(_ unionByName _)
-  }
+  def build(spark: SparkSession, dir: String,
+            params: ConsumeParams = ConsumeParams()): DataFrame =
+    compose(spark, dir, params).frames
+      .map { case (_, out) => out.select(outputCols.map(col): _*) }
+      .reduce(_ unionByName _)
 }

@@ -51,6 +51,22 @@ class PipelineSpec extends SparkSpec {
     assert(table2.count() == again.count(), "re-run must not duplicate partitions")
   }
 
+  test("ConsumeJob.run releases every block it cached") {
+    // other suites share this session and may hold caches of the same
+    // source plans, which the job would reuse and then release: start clean
+    spark.catalog.clearCache()
+    // a cache that exists before the call and must survive it
+    val sentinel = spark.range(7).cache()
+    sentinel.count()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    ConsumeJob.run(spark, sf, Files.createTempDirectory("graft-release").toString)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore,
+      "persistent RDDs leaked")
+    assert(sentinel.storageLevel.useMemory, "a cache the job did not own was released")
+    sentinel.unpersist()
+    assert(spark.sharedState.cacheManager.isEmpty, "cached entries leaked")
+  }
+
   test("config drop/keep lists reshape the exports (script/main.py:349-372)") {
     val outDir = Files.createTempDirectory("graft-job-cfg").toString
     // prefix families AND the keep whitelist both ride in the config

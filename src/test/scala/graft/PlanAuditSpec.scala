@@ -154,60 +154,6 @@ class PlanAuditSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
-  test("bucketed consume posture: output-identical to the cache mode, and " +
-    "the per-iteration base side reads the bucketed table EXCHANGE-FREE") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val tbl = "graft_base1_planaudit"
-    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    try {
-      // output equality: the bucketed swap must not change a single row
-      val cached = SparkEntry.queries("pipe_consume_e2e")(spark, sf)
-        .collect().map(_.toString).sorted.toSeq
-      spark.catalog.clearCache()
-      val bucketed = pipeline.ConsumePipeline.buildBucketed(spark, sf,
-          table = tbl)
-        .collect().map(_.toString).sorted.toSeq
-      assert(bucketed == cached,
-        "bucketed posture drifted from the cache posture")
-      // plan pin (AQE off, uncached composition so the scan is visible):
-      // stage 2+3 over the bucketed table must contain NO shuffle whose
-      // subtree reads the table — the bucket layout IS the user_id
-      // alignment alignRepaired pays an exchange for. Clear the cache
-      // first: buildBucketed's per-iteration b2 cache would otherwise be
-      // plan-matched here and hide the table scan inside an
-      // InMemoryRelation.
-      spark.catalog.clearCache()
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val params = pipeline.ConsumeParams()
-      val side = pipeline.ConsumePipeline.SideInputs(
-        Tables.orders(spark, sf), Tables.events(spark, sf),
-        params.activityFrom, params.activityTo)
-      val b3 = pipeline.ConsumePipeline.baseFinal(
-        pipeline.ConsumePipeline.enrich(
-          spark.table(tbl).filter(params.iterations.head.filter), side),
-        params.monthStart, params.monthEnd)
-      val physical = b3.queryExecution.executedPlan
-      val scans = physical.collect { case s: FileSourceScanExec
-        if s.tableIdentifier.exists(_.table == tbl) => s }
-      assert(scans.nonEmpty, s"no bucketed-table scan in:\n$physical")
-      assert(scans.forall(_.bucketedScan),
-        s"table scan must use the bucket layout:\n${scans.head}")
-      val baseSideShuffles = physical.collect {
-        case e: ShuffleExchangeExec if e.collect {
-          case s: FileSourceScanExec
-            if s.tableIdentifier.exists(_.table == tbl) => s }.nonEmpty => e
-      }
-      assert(baseSideShuffles.isEmpty,
-        s"base side re-shuffles the bucketed table:\n" +
-          baseSideShuffles.mkString("\n"))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prev)
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      spark.catalog.clearCache()
-    }
-  }
-
   test("fuzzy-dedup verification runs the merge-scan intersect inside codegen") {
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
