@@ -50,8 +50,8 @@ object SparkEntry {
     * `.forall` (r11 advice): an unparseable suffix means "not our naming
     * scheme — leave it alone", not "dead".
     */
-  private def sweepDeadPidDirs(tmpRoot: java.nio.file.Path,
-                               prefix: String): Unit =
+  private[graft] def sweepDeadPidDirs(tmpRoot: java.nio.file.Path,
+                                      prefix: String): Unit =
     scala.util.Using.resource(java.nio.file.Files.list(tmpRoot)) { st =>
       st.iterator().forEachRemaining { p =>
         val n = p.getFileName.toString
@@ -66,6 +66,19 @@ object SparkEntry {
         }
       }
     }
+
+  /** This process's work dir for a query that stores an index:
+    * `<java.io.tmpdir>/graft-<tag>-<hex dir hash>-<pid>`. Pid-suffixed so
+    * two concurrent graft processes on the same data dir (a Bench and a
+    * Verify run) never overwrite each other's index mid-scan (round 11);
+    * dead pids' leftover dirs under the same prefix are swept first.
+    */
+  private[graft] def pidWorkDir(tag: String, dir: String): String = {
+    val tmpRoot = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+    val prefix = s"graft-$tag-${java.lang.Integer.toHexString(dir.hashCode)}-"
+    sweepDeadPidDirs(tmpRoot, prefix)
+    s"$tmpRoot/$prefix${ProcessHandle.current().pid()}"
+  }
 
   private def trainingOps: Map[String, Q] = Map(
     // Exact dedup: hash-groupBy on the dup key, keep smallest doc_id.
@@ -145,31 +158,21 @@ object SparkEntry {
     // argument in Jaccard.containmentPairsBounded's scaladoc).
     "d15b_containment_bounded" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      val tmpRoot = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-      val prefix = s"graft-d15b-${java.lang.Integer.toHexString(dir.hashCode)}-"
-      sweepDeadPidDirs(tmpRoot, prefix)
-      val work = s"$tmpRoot/$prefix${ProcessHandle.current().pid()}"
       // Scale-adaptive job sizing (r13, guide §2): the candidate stage
       // packs 16-grain token ranges into sequential jobs by their MEASURED
-      // candidate weight, capped at pairsPerJob in-flight pairs per job —
-      // the executor-memory knob a 100 TB run sizes (~50M pairs ≈ 1.2 GB
-      // of in-flight candidate rows at 24 B each, executor-heap scale; a
-      // bigger tier raises it, a smaller one lowers it). Small inputs run
-      // ONE job (the inline shape); the r12 RAM-cliff cap still binds at
-      // scale because the cap is measured, not assumed. Batch-invariance
-      // is oracle-proven, so the pinned SPARK_GRAFT_D15B_BATCHES rehearsal
-      // mode (one job per range, knob-matrix comparable) stays available.
-      val pinned = sys.env.get("SPARK_GRAFT_D15B_BATCHES").map(_.toInt)
-      val pairsPerJob =
-        sys.env.getOrElse("SPARK_GRAFT_D15B_PAIRS_PER_JOB", "50000000").toLong
+      // candidate weight, capped at 50M in-flight pairs per job — the
+      // executor-memory knob a 100 TB run sizes (≈ 1.2 GB of in-flight
+      // candidate rows at 24 B each, executor-heap scale; a bigger tier
+      // raises it, a smaller one lowers it). Small inputs run ONE job (the
+      // inline shape); the r12 RAM-cliff cap still binds at scale because
+      // the cap is measured, not assumed.
       Jaccard.containmentPairsBounded(
         Jaccard.shingleSets(docs.filter(col("doc_id") % 50 === 0),
           col("doc_id"), col("text"), 1),
         Jaccard.shingleSets(docs, col("doc_id"), col("text"), 1),
-        threshold = 0.5, tokenBatches = pinned.getOrElse(16), workDir = work,
-        broadcastProbes = true,
-        maxPairsPerJob = if (pinned.isDefined) Long.MaxValue else pairsPerJob,
-        groupRanges = pinned.isEmpty)
+        threshold = 0.5, tokenBatches = 16,
+        workDir = pidWorkDir("d15b", dir), broadcastProbes = true,
+        maxPairsPerJob = 50000000L)
     },
 
     // Embedding-cosine near-dup, probe sample vs corpus.
@@ -2698,14 +2701,7 @@ object SparkEntry {
     // pattern).
     "s30_ivf_pq_stored" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
-      // pid-suffixed: two concurrent graft processes on the same data dir
-      // (a Bench and a Verify run) must not overwrite each other's index
-      // mid-scan (r11 review find). Dead pids' leftover dirs are swept at
-      // entry so repeated runs don't accrete orphan indexes in tmpdir.
-      val tmpRoot = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-      val prefix = s"graft-ivfpq-${java.lang.Integer.toHexString(dir.hashCode)}-"
-      sweepDeadPidDirs(tmpRoot, prefix)
-      val idx = s"$tmpRoot/$prefix${ProcessHandle.current().pid()}"
+      val idx = pidWorkDir("ivfpq", dir)
       Quantize.writeIvfPqIndex(emb, idx, nCells = 16, m = 4, k = 4, dim = 64)
       // geometry (m/k/dim/nCells) comes from the index's _meta sidecar —
       // the query side passes only the path and the query-time knobs
@@ -2722,10 +2718,7 @@ object SparkEntry {
     // Oracle = s9's inline replay with the same candidate predicate.
     "s31_filtered_stored" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
-      val tmpRoot = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-      val prefix = s"graft-ivfpqf-${java.lang.Integer.toHexString(dir.hashCode)}-"
-      sweepDeadPidDirs(tmpRoot, prefix)
-      val idx = s"$tmpRoot/$prefix${ProcessHandle.current().pid()}"
+      val idx = pidWorkDir("ivfpqf", dir)
       Quantize.writeIvfPqIndex(emb, idx, nCells = 16, m = 4, k = 4,
         dim = 64, attrs = Seq("label"))
       Quantize.ivfPqTopKStored(emb.filter(col("vec_id") % 50 === 0), idx,
@@ -2742,10 +2735,7 @@ object SparkEntry {
     // hash-fails.
     "s32_ivf_pq_upsert" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
-      val tmpRoot = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-      val prefix = s"graft-ivfpqu-${java.lang.Integer.toHexString(dir.hashCode)}-"
-      sweepDeadPidDirs(tmpRoot, prefix)
-      val idx = s"$tmpRoot/$prefix${ProcessHandle.current().pid()}"
+      val idx = pidWorkDir("ivfpqu", dir)
       Quantize.writeIvfPqIndex(emb.filter(col("vec_id") % 2 === 0), idx,
         nCells = 16, m = 4, k = 4, dim = 64)
       Quantize.appendIvfPqIndex(emb.filter(col("vec_id") % 2 =!= 0), idx)
@@ -2761,10 +2751,7 @@ object SparkEntry {
     // excluded from the candidate set only.
     "s33_ivf_pq_delete" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
-      val tmpRoot = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-      val prefix = s"graft-ivfpqd-${java.lang.Integer.toHexString(dir.hashCode)}-"
-      sweepDeadPidDirs(tmpRoot, prefix)
-      val idx = s"$tmpRoot/$prefix${ProcessHandle.current().pid()}"
+      val idx = pidWorkDir("ivfpqd", dir)
       Quantize.writeIvfPqIndex(emb, idx, nCells = 16, m = 4, k = 4, dim = 64)
       Quantize.deleteFromIvfPqIndex(
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), idx)
@@ -2777,10 +2764,7 @@ object SparkEntry {
     // tombstone path and the compacted index are the same index.
     "s34_ivf_pq_compact" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
-      val tmpRoot = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-      val prefix = s"graft-ivfpqc-${java.lang.Integer.toHexString(dir.hashCode)}-"
-      sweepDeadPidDirs(tmpRoot, prefix)
-      val idx = s"$tmpRoot/$prefix${ProcessHandle.current().pid()}"
+      val idx = pidWorkDir("ivfpqc", dir)
       Quantize.writeIvfPqIndex(emb, idx, nCells = 16, m = 4, k = 4, dim = 64)
       Quantize.deleteFromIvfPqIndex(
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), idx)

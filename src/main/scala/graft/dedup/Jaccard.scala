@@ -163,7 +163,7 @@ object Jaccard {
     *    prunes it inside the join, before any exchange.
     *
     * Emits possibly-duplicated (id_a, id_b) match rows — callers dedup
-    * (`.distinct()` inline, or per-batch in [[containmentPairsBounded]]).
+    * (`.distinct()` inline, or per-job in [[containmentPairsBounded]]).
     */
   /** Positional inverted index: (id, n, pos, tok) with `pos` = the
     * token's 1-based rank in the document's (df, tok)-ascending order —
@@ -244,63 +244,48 @@ object Jaccard {
   /** [[containmentPairs]] with the candidate stage BATCHED by token range —
     * the round-12 scale posture for the measured sf10 RAM cliff: instead
     * of one job whose in-flight candidate set grows with the corpus, the
-    * prefix-token space splits into `tokenBatches` hash ranges and each
-    * range runs candidate-join → dedup → verify as its OWN sequential
-    * action, landing verified pairs under `workDir`. Peak in-flight
-    * candidate volume is capped at ~1/tokenBatches of the total (tokens
-    * hash-uniformly over ranges), turning the cliff into a planned
-    * iteration count — the knob a 100 TB job sizes to its executors'
-    * memory, exactly like the IVF probe budget.
+    * prefix-token space splits into `tokenBatches` hash ranges, both ranked
+    * indexes land under `workDir` partitioned by range, and the candidate
+    * join runs as sequential actions over groups of ranges, each landing
+    * its deduped candidate pairs on disk before the next starts.
+    *
+    * JOB SIZING is derived from measured input size (optimization guide
+    * §2), not assumed: each range's candidate weight `Σ_tok na·nb` is read
+    * from the just-written indexes (one token-df-scale aggregate,
+    * `tokenBatches` rows collected — control flow). Consecutive ranges
+    * pack into one job while the job's weight stays ≤ `maxPairsPerJob`; a
+    * range with no candidates is skipped outright. `tokenBatches` only sets
+    * the GRAIN of the on-disk range partitioning; the number of sequential
+    * candidate jobs follows the data — a small input runs one job, a
+    * 100 TB input ceil(W / maxPairsPerJob) jobs.
+    *
+    * HOT-RANGE GUARD: ranges hash-balance the candidate volume only when
+    * no single token dominates; one hot token (a universal boilerplate
+    * shingle) lands ALL of its `na·nb` pairs in whichever range its hash
+    * picks. A range whose own weight exceeds `maxPairsPerJob` runs as
+    * `ceil(w / maxPairsPerJob)` sequential sub-jobs sliced by PROBE-ID hash
+    * — slicing the probe side splits even a single token's pair block,
+    * which re-hashing tokens cannot.
     *
     * Exactness: a qualifying pair's first shared prefix token lands in
-    * exactly one batch and survives the positional filter there, so the
-    * pair is verified in ≥ 1 batch; a pair whose prefix tokens span
-    * several batches verifies redundantly (identical rows — the final
-    * read dedups), bounded by min(prefix length, tokenBatches). The
-    * hashed-set frames are cached once across all batches.
+    * exactly one range and survives the positional filter there; a job is
+    * a union of whole ranges, and sub-jobs partition a range's `id_a`
+    * space, so the union of all jobs contains every qualifying pair. A
+    * pair whose prefix tokens span several ranges appears redundantly
+    * (identical rows — the final read dedups). Verification runs once over
+    * the deduped candidate union; the hashed-set frames are cached once.
+    * PropertySpec pins equality with [[containmentPairs]].
     *
-    * Returns the verified pairs read back from `workDir` (deduped);
-    * callers own the directory's lifecycle.
-    */
-  /** @param maxPairsPerJob HOT-RANGE GUARD: token ranges hash-balance the
-    *        candidate volume only when no single token dominates; one hot
-    *        token (a universal boilerplate shingle) lands ALL of its
-    *        `np·nc` pairs in whichever range its hash picks, re-creating
-    *        the cliff the batching exists to cap. With a bound set, the
-    *        per-range candidate weight `Σ_tok np·nc` is computed from the
-    *        ranked indexes (one token-df-scale aggregate; `tokenBatches`
-    *        rows to the driver — control flow), and any range past the
-    *        bound runs as `ceil(w / bound)` sequential sub-jobs sliced by
-    *        PROBE-ID hash — slicing the probe side splits even a single
-    *        token's pair block, which re-hashing tokens cannot. Exactness
-    *        is untouched: the sub-jobs partition the range's `id_a` space,
-    *        so their union is exactly the range's candidate join
-    *        (PropertySpec pins equality on a constructed hot-token
-    *        corpus). Default = no bound (the measured r12 posture).
-    */
-  /** @param groupRanges SCALE-ADAPTIVE JOB SIZING (optimization guide §2:
-    *        derive partitioning from measured input size, not a constant
-    *        tuned for one tier): when set, token ranges are PACKED into
-    *        sequential jobs by their measured candidate weight `Σ_tok
-    *        na·nb` — consecutive ranges group together while the group's
-    *        weight stays ≤ `maxPairsPerJob`, a range with no candidates is
-    *        skipped outright, and a single overweight range still splits
-    *        into probe-id sub-jobs (the hot-range guard). `tokenBatches`
-    *        then only sets the GRAIN of the on-disk range partitioning;
-    *        the number of sequential candidate jobs follows the DATA. A
-    *        small input runs one job (the inline shape, minus nothing);
-    *        a 100 TB input runs ceil(W / maxPairsPerJob) jobs — the same
-    *        peak-memory cap as before, now measured instead of assumed.
-    *        Exactness: a job is a union of whole token ranges, so the
-    *        per-range argument (first shared prefix token lands in exactly
-    *        one range) is untouched; PropertySpec pins equality.
+    * @param maxPairsPerJob in-flight candidate-pair budget per sequential
+    *        job — the executor-memory knob. Default: no bound (every live
+    *        range in one job).
+    * @return the verified pairs; callers own `workDir`'s lifecycle.
     */
   def containmentPairsBounded(probes: DataFrame, corpus: DataFrame,
                               threshold: Double, tokenBatches: Int,
                               workDir: String,
                               broadcastProbes: Boolean = false,
-                              maxPairsPerJob: Long = Long.MaxValue,
-                              groupRanges: Boolean = false): DataFrame = {
+                              maxPairsPerJob: Long = Long.MaxValue): DataFrame = {
     require(tokenBatches >= 1, "tokenBatches must be >= 1")
     require(maxPairsPerJob >= 1, "maxPairsPerJob must be >= 1")
     val spark = probes.sparkSession
@@ -336,48 +321,40 @@ object Jaccard {
     val iaFull = spark.read.parquet(iaPath)
     val ibFull = spark.read.parquet(ibPath)
     // per-range candidate weight Σ_tok na·nb, read from the just-written
-    // ranked indexes (tokenBatches rows — control flow). Feeds BOTH the
-    // hot-range guard (a range past maxPairsPerJob splits into
-    // probe-id-hash sub-jobs) and, under `groupRanges`, the job packing.
-    val needWeights = groupRanges || maxPairsPerJob != Long.MaxValue
-    val weights: Map[Int, Long] =
-      if (!needWeights) Map.empty
-      else {
-        val na = iaFull.groupBy("__tb", "tok").agg(count(lit(1)).as("na"))
-        val nb = ibFull.groupBy("__tb", "tok").agg(count(lit(1)).as("nb"))
-        na.join(nb, Seq("__tb", "tok"))
-          .groupBy("__tb").agg(sum(col("na") * col("nb")).as("w"))
-          .collect()
-          .map(r => r.getAs[Number](0).intValue() -> r.getLong(1))
-          .toMap
-      }
+    // ranked indexes (tokenBatches rows — control flow): feeds both the
+    // job packing and the hot-range guard
+    val weights: Map[Int, Long] = {
+      val na = iaFull.groupBy("__tb", "tok").agg(count(lit(1)).as("na"))
+      val nb = ibFull.groupBy("__tb", "tok").agg(count(lit(1)).as("nb"))
+      na.join(nb, Seq("__tb", "tok"))
+        .groupBy("__tb").agg(sum(col("na") * col("nb")).as("w"))
+        .collect()
+        .map(r => r.getAs[Number](0).intValue() -> r.getLong(1))
+        .toMap
+    }
     val subJobs: Map[Int, Int] =
       if (maxPairsPerJob == Long.MaxValue) Map.empty
       else weights.map { case (b, w) =>
         b -> math.max(1L, (w + maxPairsPerJob - 1) / maxPairsPerJob).toInt
       }
     // job list: each entry is the set of token ranges one sequential
-    // action covers. Default (groupRanges = false): one job per range —
-    // the r12 posture, knob-matrix comparable. groupRanges: greedy packing
-    // of consecutive ranges up to maxPairsPerJob; zero-weight ranges
-    // (no token shared between probe and corpus side) drop out — their
-    // candidate join is provably empty.
-    val jobGroups: Seq[Seq[Int]] =
-      if (!groupRanges) (0 until tokenBatches).map(Seq(_))
-      else {
-        val live = (0 until tokenBatches).filter(b => weights.getOrElse(b, 0L) > 0L)
-        val groups = scala.collection.mutable.ArrayBuffer[Vector[Int]]()
-        var cur = Vector.empty[Int]
-        var curW = 0L
-        live.foreach { b =>
-          val w = weights(b)
-          if (cur.nonEmpty && curW + w > maxPairsPerJob) {
-            groups += cur; cur = Vector(b); curW = w
-          } else { cur = cur :+ b; curW += w }
-        }
-        if (cur.nonEmpty) groups += cur
-        groups.toSeq
+    // action covers — greedy packing of consecutive ranges up to
+    // maxPairsPerJob; zero-weight ranges (no token shared between probe
+    // and corpus side) drop out, their candidate join is provably empty
+    val jobGroups: Seq[Seq[Int]] = {
+      val live = (0 until tokenBatches).filter(b => weights.getOrElse(b, 0L) > 0L)
+      val groups = scala.collection.mutable.ArrayBuffer[Vector[Int]]()
+      var cur = Vector.empty[Int]
+      var curW = 0L
+      live.foreach { b =>
+        val w = weights(b)
+        if (cur.nonEmpty && curW + w > maxPairsPerJob) {
+          groups += cur; cur = Vector(b); curW = w
+        } else { cur = cur :+ b; curW += w }
       }
+      if (cur.nonEmpty) groups += cur
+      groups.toSeq
+    }
     var wrote = false
     jobGroups.foreach { group =>
       // one SEQUENTIAL action per job: the write is the action, so this

@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Scale-adaptive shuffle sizing for ITERATION loops (connected-components
@@ -46,22 +48,15 @@ object AdaptiveIter {
     * skew handling stay on); below it, AQE is paused and
     * `spark.sql.shuffle.partitions` set to the derived count for the
     * loop's duration, so each round runs as one scheduler job with
-    * byte-proportionate tasks. Previous settings are restored on exit.
+    * byte-proportionate tasks. Previous settings (set or unset) are
+    * restored on exit, also when `body` throws. An unreadable session
+    * partition count leaves the session as it is.
     */
-  /** Kill switch for A/B measurement (`SPARK_GRAFT_ITER_SIZED=0` restores
-    * the pre-round-13 behavior). Mutable so the same-JVM interleaved A/B
-    * harness (tools/IterAb) can flip arms without a process restart; never
-    * written by library code.
-    */
-  @volatile private[graft] var enabled =
-    sys.env.getOrElse("SPARK_GRAFT_ITER_SIZED", "1") != "0"
-
   def sizedRounds[T](spark: SparkSession, estRows: Long, rowBytes: Int = 48)
                     (body: => T): T = {
-    if (!enabled) return body
     val sessionParts =
       try spark.conf.get("spark.sql.shuffle.partitions").toInt
-      catch { case _: Throwable => return body }
+      catch { case NonFatal(_) => return body }
     val p = math.max(1L, (estRows.max(0L) * rowBytes + targetBytes - 1) / targetBytes)
     if (2 * p >= sessionParts) return body
     val flips = Seq(

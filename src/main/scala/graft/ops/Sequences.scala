@@ -58,8 +58,9 @@ object Sequences {
     // default already has task-level mitigation. The EXPLICIT salted path
     // below survives even with AQE off / a single key past the skew
     // thresholds, at a measured ~13% warm cost on uniform data
-    // (tools/SeqAb interleaved same-JVM minima at sf0.1: 3.17 s naive vs
-    // 3.59 s salt=8 — replication + the explode breaking WSCG fusion),
+    // (round-14 interleaved same-JVM minima at sf0.1, from an A/B harness
+    // since removed: 3.17 s naive vs 3.59 s salt=8 — replication + the
+    // explode breaking WSCG fusion),
     // which is why it is the hatch, not the default — same contract as
     // Clusters.keepBest(alternating).
     val directed = if (salt == 1) {

@@ -16,7 +16,7 @@ object ConsumeJobMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("/tmp/graft-consume-out")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.Env.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-consume")

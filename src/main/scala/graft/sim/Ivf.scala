@@ -87,10 +87,8 @@ object Ivf {
     // bit-identical by construction (same cosine loop, Spark's own
     // nan-aware double ordering, same TimSort, -Inf null guard; see
     // functions.TopCellsBySim's contract scaladoc). The HOF form stays
-    // below behind `spark.graft.nativeTopCells=false` as the executable
-    // specification (IvfSpec pins equality) and the A/B arm for isolated
-    // kernel measurements (r14 — the r13 verdict flagged the missing
-    // before-evidence).
+    // below behind `spark.graft.nativeTopCells=false` only as the
+    // executable specification (IvfSpec pins equality).
     val embDouble: Column =
       if (embFloat) col(embName).cast("array<double>") else col(embName)
     val topCells: Column =

@@ -456,14 +456,9 @@ object Similarity {
     // embFloat: the embedding rides the pair shuffle AND this cache as the
     // raw float array (half the bytes — guide §2.3); ArrayCosine widens
     // floats in-register, bit-identically to the former double payload
-    val assigned0 = Ivf.assignProbes(corpus, cents, "__kid", "__ku", nProbe,
-        embFloat = true)
-      .select(col("cell"), col("__kid").as("vid"), col("__ku").as("u"))
-    val assigned =
-      if (corpus.sparkSession.conf
-            .get("spark.graft.cachePairInputs", "true") == "true")
-        graft.dedup.CacheScope.cache(assigned0)
-      else assigned0
+    val assigned = graft.dedup.CacheScope.cache(
+      Ivf.assignProbes(corpus, cents, "__kid", "__ku", nProbe, embFloat = true)
+        .select(col("cell"), col("__kid").as("vid"), col("__ku").as("u")))
     // triangle-salted within-cell pairing: a plain cell self-join would run
     // nCells-way parallel at best and put a whole cell's quadratic pair
     // stage on one task (ScaleJoins.bucketedSelfPairs)

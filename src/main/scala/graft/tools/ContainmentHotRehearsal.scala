@@ -11,9 +11,11 @@ import graft.dedup.Jaccard
   * token's `np·nc` candidate pairs land in whichever token range its hash
   * picks, defeating hash balancing — run through
   * [[Jaccard.containmentPairsBounded]] WITHOUT and WITH `maxPairsPerJob`.
-  * Reports per-mode wall, the hot range's computed weight, the sub-job
-  * count the bound induces, and result-row equality (the guard must be a
-  * pure memory-shape knob).
+  * Without a bound every live token range packs into ONE candidate job;
+  * with it the ranges pack up to the bound and the hot range splits into
+  * probe-id sub-jobs. Reports per-mode wall, the hot range's computed
+  * weight, the sub-job count the bound induces, and result-row equality
+  * (the guard must be a pure memory-shape knob).
   *
   * {{{
   *   runMain graft.tools.ContainmentHotRehearsal 20000 200000

@@ -401,7 +401,7 @@ class PropertySpec extends SparkSpec {
         sets, sets, threshold = 0.7, tokenBatches = b, workDir = work))
       assert(got == inline, s"tokenBatches=$b drifted from inline")
     }
-    // groupRanges (r13 adaptive job packing): tiny budgets force many
+    // job packing by measured range weight: tiny budgets force many
     // groups + hot-range sub-slicing, a huge budget packs everything into
     // ONE job — all must equal the inline result exactly
     Seq(10L, 500L, Long.MaxValue).foreach { budget =>
@@ -409,8 +409,8 @@ class PropertySpec extends SparkSpec {
         .createTempDirectory(s"graft-cpbg-$budget").toString
       val got = rows(graft.dedup.Jaccard.containmentPairsBounded(
         sets, sets, threshold = 0.7, tokenBatches = 16, workDir = work,
-        maxPairsPerJob = budget, groupRanges = true))
-      assert(got == inline, s"groupRanges budget=$budget drifted from inline")
+        maxPairsPerJob = budget))
+      assert(got == inline, s"pairs budget=$budget drifted from inline")
     }
   }
 
