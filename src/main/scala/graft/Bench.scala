@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.Env.jsonString
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line (driver contract).
@@ -148,31 +149,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Env.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Live status stores retain heap that dropAllBlocks CANNOT touch:
-      // even with the UI off, AppStatusListener keeps up to 1000 jobs/
-      // stages + 100k TaskDataWrappers (per-task metric update lists) and
-      // SQLAppStatusListener keeps 1000 SQLExecutionUIData entries — each
-      // holding the FULL formatted physical plan string of plans that run
-      // to hundreds of KB here. Across the 299-query × 2-pass suite that
-      // accreted to 5–6 GB of un-collectable heap (r10 diag lines show
-      // heap≈5.6g immediately AFTER clearCache+unpersist+System.gc()),
-      // and the biggest queries then ran 3–4× slower in-suite than in a
-      // fresh JVM (a35: 26.3 s suite vs 3.7 s fresh-JVM warm — the r10
-      // verdict's one `weak` grade). Keep only a handful of entries: the
-      // bench reads none of them.
-      .config("spark.ui.retainedJobs", "20")
-      .config("spark.ui.retainedStages", "40")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.sql.ui.retainedExecutions", "5")
-      .config("spark.ui.retainedDeadExecutors", "0")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Env.session()
 
     Tables.all(spark, sfDir).foreach { case (_, df) =>
       try df.count() catch { case _: Throwable => () }
@@ -381,16 +358,12 @@ object Bench {
         out
       }
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     val ok = results.filter(_._3.isEmpty)
-    val qs = ok.map { case (k, v, _, _) => jstr(k) + ":" + v }
+    val qs = ok.map { case (k, v, _, _) => jsonString(k) + ":" + v }
       .mkString("{", ",", "}")
     // failed queries report an explicit error, never a plausible wall time
-    val errs = results.collect { case (k, _, Some(e), _) => jstr(k) + ":" + jstr(e) }
+    val errs = results
+      .collect { case (k, _, Some(e), _) => jsonString(k) + ":" + jsonString(e) }
       .mkString("{", ",", "}")
     val total = ok.map(_._2).sum
     // Per-family subtotals (family = query-name prefix before the first
@@ -407,7 +380,7 @@ object Bench {
         .toSeq.sortBy(_._1)
         .map { case (f, rs) => (f, rs.map(_._2).sum, rs.size) }
     val familiesJson = famAgg
-      .map { case (f, sec, n) => jstr(f) + s""":{"sec":$sec,"n":$n}""" }
+      .map { case (f, sec, n) => jsonString(f) + s""":{"sec":$sec,"n":$n}""" }
       .mkString("{", ",", "}")
     // Per-query calibration (seconds for the fixed probe, measured adjacent
     // to each recorded min) + its min/max over the session: a reader can
@@ -421,7 +394,7 @@ object Bench {
     val calibJson =
       if (allCalib.isEmpty) """"calib":null"""
       else {
-        val per = results.map { case (k, _, _, c) => jstr(k) + ":" + c }
+        val per = results.map { case (k, _, _, c) => jsonString(k) + ":" + c }
           .mkString("{", ",", "}")
         s""""calib":{"unit":"sec","min":${allCalib.min},"max":${allCalib.max},"per_query":$per}"""
       }
@@ -443,7 +416,7 @@ object Bench {
         .fold("null") { case (m, _) => (suiteSec / m).toString }
       val runsJson = runs.map { case (s, c) => s"[$s,$c]" }
         .mkString("[", ",", "]")
-      jstr(name) +
+      jsonString(name) +
         s""":{"suite":$suiteSec,"suite_calib":$suiteCalib,"isolated":$iso,""" +
         s""""median":$med,"median_cert":$medCert,"certified":$isCert,""" +
         s""""suite_over_cert":$ratio,"runs":$runsJson}"""
@@ -481,14 +454,14 @@ object Bench {
       val uncert = tail.filter { case (n, sec, _, c) =>
         !certified(c) && !tailEvidence.get(n).exists(ev => sec <= ev + 1e-9)
       }
-      val uncertJson = uncert.take(20).map(r => jstr(r._1))
+      val uncertJson = uncert.take(20).map(r => jsonString(r._1))
         .mkString("[", ",", "]")
       s"""{"n_tail":${tail.size},"certified":${tail.size - uncert.size},""" +
         s""""reruns":$tailReruns,"n_uncertified":${uncert.size},""" +
         s""""uncertified":$uncertJson}"""
     }
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"families":$familiesJson,"heavy_isolation":$heavyJson,"heavy_cert":$heavyCertJson,"tail_cert":$tailCertJson,"errors":$errs,$calibJson,"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"families":$familiesJson,"heavy_isolation":$heavyJson,"heavy_cert":$heavyCertJson,"tail_cert":$tailCertJson,"errors":$errs,$calibJson,"sf":${jsonString(sfDir)}}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), line + "\n")
     // Compact summary as the LAST stdout line (judge ask, r9): the driver's
     // tail capture truncates at 2000 chars, so the full 298-query record
@@ -511,15 +484,15 @@ object Bench {
     // 400 chars keeps the line safely under the driver's 2000-char tail
     // truncation window.
     val top20 = results.filter(_._3.isEmpty).sortBy(-_._2).take(20)
-    val top20Json = top20.map { case (k, v, _, _) => jstr(k) + ":" + rnd(v, 2) }
+    val top20Json = top20.map { case (k, v, _, _) => jsonString(k) + ":" + rnd(v, 2) }
       .mkString("{", ",", "}")
     val top5Med = top20.take(5).flatMap { case (k, _, _, _) =>
-      isolatedRuns.get(k).map(rs => jstr(k) + ":" + rnd(median(rs.map(_._1)), 2))
+      isolatedRuns.get(k).map(rs => jsonString(k) + ":" + rnd(median(rs.map(_._1)), 2))
     }.mkString("{", ",", "}")
     // same aggregation as familiesJson above, formatted compactly — one
     // computation, two renderings, so the two records can never disagree
     val famSummary = famAgg
-      .map { case (f, sec, _) => jstr(f) + ":" + rnd(sec, 1) }
+      .map { case (f, sec, _) => jsonString(f) + ":" + rnd(sec, 1) }
       .mkString("{", ",", "}")
     val nOk = ok.size
     val nErr = results.count(_._3.nonEmpty)
@@ -528,7 +501,7 @@ object Bench {
       else s"""{"min":${rnd(allCalib.min, 3)},"max":${rnd(allCalib.max, 3)}}"""
     val secPerQuery = rnd(if (nOk > 0) total / nOk else 0.0, 3)
     val summary =
-      s"""{"metric":"total","value":${rnd(total, 1)},"unit":"sec","n_queries":$nOk,"errors":$nErr,"sec_per_query":$secPerQuery,"queries":$top20Json,"families":$famSummary,"heavy_median":$top5Med,"heavy_cert":$heavyCertJson,"tail_cert":$tailCertJson,"calib":$calibRange,"sf":${jstr(sfDir)},"full":"bench_out.json"}"""
+      s"""{"metric":"total","value":${rnd(total, 1)},"unit":"sec","n_queries":$nOk,"errors":$nErr,"sec_per_query":$secPerQuery,"queries":$top20Json,"families":$famSummary,"heavy_median":$top5Med,"heavy_cert":$heavyCertJson,"tail_cert":$tailCertJson,"calib":$calibRange,"sf":${jsonString(sfDir)},"full":"bench_out.json"}"""
     spark.stop()
     // last line on stdout, after Spark's shutdown logging
     println(summary)

@@ -44,19 +44,13 @@ object Sinks {
     * predicate)` + append, i.e. delete-insert of exactly the partitions
     * present in `df`. Spark-native equivalent: dynamic partition overwrite —
     * only partitions with incoming rows are replaced, untouched partitions
-    * survive. One session conf, no manual delete pass, safe to re-run
-    * (idempotent month re-processing, SURVEY §2.10).
+    * survive. One writer option (file-source writes read it ahead of the
+    * session conf, so no other write in the session changes mode), no manual
+    * delete pass, safe to re-run (idempotent month re-processing, SURVEY §2.10).
     */
-  def overwritePartitions(df: DataFrame, path: String, partitionCol: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+  def overwritePartitions(df: DataFrame, path: String, partitionCol: String): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol).parquet(path)
 
   /** K3, transactional variant (`replaceWhere` semantics): the reference job
     * loads the Delta extension (`deployment/glue.tf:143,145` —
@@ -681,6 +675,8 @@ object Sinks {
       if (incomingTypes.contains(f.name)) col(f.name).cast(f.dataType)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
+    // session conf, not the writer option: insertInto drops the writer's
+    // options on its way to the v1 insert command
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try aligned.write.mode("overwrite").insertInto(table)
@@ -704,9 +700,6 @@ object Sinks {
       .format("parquet")
       .saveAsTable(table)
 
-  /** ORC export — for consumers standardized on the ORC toolchain; same
-    * writer semantics as the parquet paths (snappy via Spark defaults).
-    */
   /** Small-files compaction plan — the lakehouse maintenance step: group
     * a directory's parquet files into target-sized rewrite bins
     * (first-fit in name order, deterministic; a file already over the
@@ -743,6 +736,9 @@ object Sinks {
         sort_array(collect_list("file")).as("files"))
   }
 
+  /** ORC export — for consumers standardized on the ORC toolchain; same
+    * writer semantics as the parquet paths (snappy via Spark defaults).
+    */
   def orc(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").orc(path)
 }

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable job entry point — the reference's `main.py` as an application:
   *
   * {{{
@@ -16,16 +14,7 @@ object ConsumeJobMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("/tmp/graft-consume-out")
-    val cpus = graft.Env.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-consume")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Env.session("graft-consume")
     val result = ConsumeJob.run(spark, sfDir, outDir)
     println(s"[consume] wrote ${result.count()} rows to $outDir")
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Env
@@ -60,18 +60,7 @@ object BpeEncodeScale {
       .map { l => val p = l.split('\t'); (p(0), p(1)) }.toSeq
     require(all.size >= sizes.max,
       s"table has ${all.size} merges; largest requested size ${sizes.max}")
-    val cpus = Env.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.ui.retainedJobs", "20")
-      .config("spark.ui.retainedStages", "40")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.sql.ui.retainedExecutions", "5")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Env.session()
     val docs = BpeZipf.corpus(spark, nDocs, wordsPerDoc, vocab = 50000)
       .persist()
     val sub = docs.filter(col("doc_id") < foldDocs).persist()

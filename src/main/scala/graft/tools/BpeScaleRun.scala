@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Env
@@ -22,21 +21,7 @@ object BpeScaleRun {
     val dir = args(0)
     val nMerges = args(1).toInt
     val batch = args.lift(2).map(_.toInt).getOrElse(8)
-    val cpus = Env.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the long-driver-loop retention caps (SCALE.md "Bench integrity"):
-      // a 500-round trainer is exactly the thousands-of-actions shape
-      // that accretes status-store heap otherwise
-      .config("spark.ui.retainedJobs", "20")
-      .config("spark.ui.retainedStages", "40")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.sql.ui.retainedExecutions", "5")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Env.session()
     val docs = graft.Tables.documents(spark, dir)
     val nDocs = docs.count() // materialize input outside the timed window
     val t0 = System.nanoTime()

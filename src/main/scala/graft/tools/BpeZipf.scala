@@ -73,18 +73,7 @@ object BpeZipf {
     val (nDocs, wordsPerDoc, vocab, nMerges, batch) =
       (args(0).toLong, args(1).toInt, args(2).toInt, args(3).toInt,
         args(4).toInt)
-    val cpus = Env.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.ui.retainedJobs", "20")
-      .config("spark.ui.retainedStages", "40")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.sql.ui.retainedExecutions", "5")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Env.session()
     val docs = corpus(spark, nDocs, wordsPerDoc, vocab)
     val distinctWords = docs
       .select(explode(split(col("text"), " ")).as("w"))

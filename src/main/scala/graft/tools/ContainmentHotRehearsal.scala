@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Env
@@ -26,18 +25,7 @@ object ContainmentHotRehearsal {
   def main(args: Array[String]): Unit = {
     val nDocs = args.lift(0).map(_.toLong).getOrElse(20000L)
     val bound = args.lift(1).map(_.toLong).getOrElse(200000L)
-    val cpus = Env.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.ui.retainedJobs", "20")
-      .config("spark.ui.retainedStages", "40")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.sql.ui.retainedExecutions", "5")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Env.session()
     // every doc: the hot token + 6 tail tokens from a 4k vocabulary
     // (deterministic in doc_id) — probes are a 1-in-50 sample, so the hot
     // token alone contributes (nDocs/50)·nDocs candidate pairs

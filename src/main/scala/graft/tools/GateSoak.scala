@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Env
@@ -33,20 +32,7 @@ object GateSoak {
     val work = args(0)
     val triggers = args.lift(1).map(_.toInt).getOrElse(300)
     val compactEvery = args.lift(2).map(_.toInt).getOrElse(16)
-    val cpus = Env.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the soak driver is long-lived like Bench — cap the status stores
-      // (see Bench.scala: 5-6 GB of un-GC-able listener state otherwise)
-      .config("spark.ui.retainedJobs", "20")
-      .config("spark.ui.retainedStages", "40")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.sql.ui.retainedExecutions", "5")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Env.session()
     import spark.implicits._
 
     val historyPath = s"$work/history"

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print executed plans of selected queries
   * (`runMain graft.tools.PlanDump [sfDir] [query...]`).
   *
@@ -20,13 +18,7 @@ object PlanDump {
       else (None, args)
     val dir = rest.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (rest.length > 1) rest.tail.toSeq else Seq("d5_embedding_neardup")
-    val spark = SparkSession.builder()
-      .master(s"local[${graft.Env.cpus}]")
-      .config("spark.sql.shuffle.partitions", graft.Env.cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Env.session()
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, dir)
       mode match {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Env
 
 /** Scaling-rehearsal runner: executes a comma-separated list of
@@ -19,6 +17,17 @@ import graft.Env
   * though the absolute numbers carry first-execution JIT cost. Storage
   * blocks are dropped between queries the same way Bench does, so one
   * query's localCheckpoint rounds can't crowd a later query into spill.
+  *
+  * Tier experiments set the session through `spark.*` properties, e.g.
+  * `JAVA_TOOL_OPTIONS='-Dspark.sql.shuffle.partitions=N'`: the partition
+  * count the SCALE.md table says scales with data (2–3× total cores on a
+  * real cluster) — the 10×/100× tiers on a FIXED 32 keep per-partition
+  * reduce state growing with the tier, the difference between spill-thrash
+  * and linear in the d15 sf10 decade. `-Dspark.sql.adaptive.enabled=false`
+  * isolates AQE, and `-Dspark.sql.adaptive.coalescePartitions.enabled=false`
+  * keeps its join re-planning but stops its byte-targeted post-shuffle
+  * coalescing, which can under-provision tasks on CPU-per-byte-extreme
+  * plans (compressed-long shuffles feeding enumeration-heavy joins).
   */
 object RehearsalRun {
   def main(args: Array[String]): Unit = {
@@ -27,31 +36,7 @@ object RehearsalRun {
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    val cpus = Env.cpus
-    // SPARK_GRAFT_SHUFFLE overrides the partition count: the knob the
-    // SCALE.md table says scales with data (2–3× total cores on a real
-    // cluster). The rehearsal's 10×/100× tiers on a FIXED 32 keep
-    // per-partition reduce state growing with the tier — the d15 sf10
-    // decade measured the difference between spill-thrash and linear.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // SPARK_GRAFT_NO_AQE=1: isolate AQE's post-shuffle coalescing in a
-      // tier experiment — on extreme CPU-per-byte plans (compressed-long
-      // shuffles feeding enumeration-heavy joins) byte-targeted coalescing
-      // can under-provision tasks
-      .config("spark.sql.adaptive.enabled",
-        (!sys.env.contains("SPARK_GRAFT_NO_AQE")).toString)
-      // SPARK_GRAFT_NO_COALESCE=1: keep AQE's join re-planning but stop
-      // its byte-targeted post-shuffle coalescing — the two effects need
-      // separating on CPU-per-byte-extreme plans
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        (!sys.env.contains("SPARK_GRAFT_NO_COALESCE")).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Env.session()
     // Per-query physical I/O accounting (round 12): when a wall ratio
     // comes out superlinear, the shuffle/spill byte totals say whether the
     // PLAN grew superlinearly (bytes grew faster than data) or the BOX hit

@@ -49,14 +49,7 @@ object ScaleRehearsal {
     require(replicas <= 312,
       "replicas must be <= 312 (12 affine multipliers x 26 shifts " +
         "exhaust the distinct alphabet bijections this map family has)")
-    val cpus = Env.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Env.session()
     generate(spark, src, dst, replicas)
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -67,13 +67,7 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_SKEW_REPS", "3").toInt
-    val cpus = graft.Env.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Env.session()
 
     // ---- Fixture 1: hot-bucket self-pairs --------------------------------
     // events sf0.1 = 100k rows. Bucket so bucket 0 holds ~10% (10k rows →
