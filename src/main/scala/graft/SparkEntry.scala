@@ -3692,8 +3692,9 @@ object SparkEntry {
     },
 
     // The full composed 4-stage consume pipeline (SURVEY §3.3): CDC repair →
-    // day-dedup + enrichment → activity/control/counter joins → invalid anti
-    // join + price-change history → geo broadcast + per-iteration union.
+    // day-dedup + enrichment → activity/control/counter joins → invalid-id
+    // filter + price-change history → geo broadcast, every iteration in one
+    // pass over rows tagged with their iterations.
     "pipe_consume_e2e" -> { (s, dir) => ConsumePipeline.build(s, dir) },
 
     // The same pipeline driven by the reference's execution mode: four

@@ -65,17 +65,6 @@ object Joins {
     filteredMax.join(allMax, key, "left")
       .where(col(filteredCol) < col(allCol))
 
-  /** J7: NOT IN anti join (`3-basedata_df_final_query.sql:32-42`). The
-    * faithful form is SQL `NOT IN` (null-aware: one null key in the subquery
-    * empties the result). Catalyst rewrites it to a null-aware anti join,
-    * which DEGRADES to a broadcast nested loop if the subquery side is big
-    * and may contain nulls — so when the key is provably non-null, use this
-    * `left_anti` form instead: it plans as a regular (broadcastable) anti
-    * hash join.
-    */
-  def antiJoin(left: DataFrame, exclude: DataFrame, cond: Column): DataFrame =
-    left.join(exclude, cond, "left_anti")
-
   /** J8: broadcast lookup join on a derived prefix key
     * (`script/main.py:128-154`): probe side computes `substring(geoCol,1,n)`,
     * build side is a small dim whose key is an int — the string-vs-int

@@ -10,17 +10,19 @@ import org.apache.spark.sql.functions._
   * month — plus the entity's last record before the month ("previous
   * price"), labelled so consumers can reconstruct the change log.
   *
-  * Both branches are top-1-per-key windows over the same key family, so the
-  * whole operator costs one shuffle on the entity key (Catalyst reuses the
-  * exchange across the two windows reading the same cached/pruned scan).
+  * One pass over the input: both picks are `row_number` windows over the
+  * same key family — W3 partitioned by (keys, price, in-month flag), W4 by
+  * (keys, in-month flag) — and a filter keeps each window's top row on its
+  * own side of the month start. That filter is the reference's U2 union,
+  * without reading the input twice. Data hash-partitioned on any subset of
+  * the keys satisfies both windows, so the operator adds no exchange of its
+  * own.
   * The price column is parameterised exactly like the reference
   * (`script/helper.py:192-201` picks buy vs rent amount per distribution).
   */
 object PriceChange {
 
-  /** @param monthStart inclusive; @param monthEnd exclusive.
-    * @param tiebreak   unique descending tiebreaker for deterministic picks.
-    */
+  /** One entity key: the single-key form of the operator below. */
   def history(
       df: DataFrame,
       key: Column,
@@ -28,22 +30,34 @@ object PriceChange {
       ts: Column,
       tiebreak: Seq[Column],
       monthStart: String,
+      monthEnd: String): DataFrame =
+    history(df, Seq(key), price, ts, tiebreak, monthStart, monthEnd)
+
+  /** @param keys       the entity key (several columns for a composite key).
+    * @param monthStart inclusive; @param monthEnd exclusive.
+    * @param tiebreak   unique descending tiebreaker for deterministic picks.
+    */
+  def history(
+      df: DataFrame,
+      keys: Seq[Column],
+      price: Column,
+      ts: Column,
+      tiebreak: Seq[Column],
+      monthStart: String,
       monthEnd: String): DataFrame = {
-
-    // W3: latest record per (key, distinct price) inside the month.
-    val current = Dedup.topOnePerKey(
-      df.filter(ts >= lit(monthStart) && ts < lit(monthEnd)),
-      Seq(key, price),
-      ts.desc +: tiebreak)
-      .withColumn("price_src", lit("current"))
-
-    // W4: single last record before the month start.
-    val previous = Dedup.topOnePerKey(
-      df.filter(ts < lit(monthStart)),
-      Seq(key),
-      ts.desc +: tiebreak)
-      .withColumn("price_src", lit("previous"))
-
-    current.unionByName(previous)
+    val inMonth = col("__in_month")
+    val order = ts.desc +: tiebreak
+    // rows before the month or inside it; the flag then tells the two apart
+    df.filter(ts < lit(monthStart) || (ts >= lit(monthStart) && ts < lit(monthEnd)))
+      .withColumn("__in_month", ts >= lit(monthStart))
+      // W3: latest record per (key, distinct price) inside the month
+      .withColumn("__rn_cur", row_number().over(
+        Window.partitionBy(keys :+ price :+ inMonth: _*).orderBy(order: _*)))
+      // W4: single last record before the month start
+      .withColumn("__rn_prev", row_number().over(
+        Window.partitionBy(keys :+ inMonth: _*).orderBy(order: _*)))
+      .filter(when(inMonth, col("__rn_cur")).otherwise(col("__rn_prev")) === 1)
+      .withColumn("price_src", when(inMonth, lit("current")).otherwise(lit("previous")))
+      .drop("__in_month", "__rn_cur", "__rn_prev")
   }
 }

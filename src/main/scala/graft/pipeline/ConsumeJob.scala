@@ -7,17 +7,20 @@ import graft.ops.Reshape
 
 /** Job orchestration (SURVEY §3.3; reference `script/main.py:221-418`):
   * the consume stages composed by [[ConsumePipeline.compose]], with the
-  * per-iteration JSON + CSV exports → accumulated union → final partitioned
-  * parquet write with delete-insert semantics (K3).
+  * per-iteration JSON + CSV exports → accumulated rows of every iteration →
+  * final partitioned parquet write with delete-insert semantics (K3).
   *
   * Mirrors the reference's action schedule: the two per-iteration exports
-  * materialize inside the loop; the accumulated union materializes once at
-  * the final write. Every stage cache — the hoisted stage 1 included —
-  * lives until after that write, then is released.
+  * run inside the loop, in loop order; the accumulated rows are written
+  * once at the end. The first export builds the composition's output
+  * cache; the later exports and the table write read it. Both of its
+  * caches (the CDC stream and the output) are released after the table
+  * write, or as soon as an export or the write throws.
   */
 object ConsumeJob {
 
-  /** @return the accumulated union that was written to `outDir/table`.
+  /** @return the accumulated rows that were written to `outDir/table`
+    * (uncached once this returns).
     *
     * `cfg` wires the reference's config-driven export shapes
     * (`script/main.py:349-351,372`, `script/config.json:5-26`):
@@ -67,10 +70,9 @@ object ConsumeJob {
           Sinks.gzipCsv(out.drop("props"), s"$outDir/csv/$name$dateKey")
       })
 
-    val union = job.frames.map(_._2).reduce(_ unionByName _)
     // K3: delete-insert of the month partitions present in the result.
-    Sinks.overwritePartitions(union, s"$outDir/table", "partition_month")
-    job.release()
-    union
+    try Sinks.overwritePartitions(job.all, s"$outDir/table", "partition_month")
+    finally job.release()
+    job.all
   }
 }

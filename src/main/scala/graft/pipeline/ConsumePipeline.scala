@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -58,8 +59,8 @@ object ConsumeParams {
   *
   * Each stage is a thin composition of the §2 operators; the value of this
   * layer is the faithful *pipeline shape*: stage order, the per-iteration
-  * loop with union accumulation, and the cache/unpersist lifecycle
-  * (`script/main.py:125,324,370`).
+  * actions over the accumulated rows of every iteration, and the
+  * cache/unpersist lifecycle (`script/main.py:125,324,370`).
   *
   * Scale notes: every stage keys on `user_id` (the reference's
   * classifiedId), so Catalyst reuses one hash-partitioning across the
@@ -90,10 +91,10 @@ object ConsumePipeline {
 
   /** The loop-invariant stage-2 side inputs — the activity id set and the
     * per-user event statistics depend only on the sources and the date
-    * window, never on the iteration, so the orchestrators compute (and
-    * cache) them ONCE instead of re-aggregating the event stream per
-    * (country × distribution) iteration like the reference's per-loop SQL
-    * does (`script/main.py:305-346`).
+    * window, never on the iteration, so the orchestrators compute them ONCE
+    * instead of re-aggregating the event stream per (country ×
+    * distribution) iteration like the reference's per-loop SQL does
+    * (`script/main.py:305-346`).
     *
     * The control argmax and both counter families (reference queries
     * 2-basedata_df_query.sql:17-45 — three separate scans + groupBys there)
@@ -103,7 +104,6 @@ object ConsumePipeline {
     */
   final case class SideInputs(active: DataFrame, userStats: DataFrame) {
     def cache(): SideInputs = { active.cache(); userStats.cache(); this }
-    def unpersist(): Unit = { active.unpersist(); userStats.unpersist() }
   }
 
   object SideInputs {
@@ -139,11 +139,12 @@ object ConsumePipeline {
     * Aligning the REPAIRED stream instead exploits the subset rule:
     * `hashpartitioning(user_id)` satisfies the day-dedup window's
     * `ClusteredDistribution(user_id, day)`, so the window's ENSURE
-    * exchange disappears, base1All caches already user_id-aligned, the
-    * iteration filters and the broadcast side joins preserve the layout,
-    * b2 caches aligned FOR FREE, and stage 3 stays shuffle-free
-    * (PlanAuditSpec pins it). Net plan: 1 REPARTITION_BY_COL total where
-    * there were 1 ENSURE + one REPARTITION_BY_COL per iteration.
+    * exchange disappears, the iteration tagging and the broadcast side
+    * joins preserve the layout, and every stage-3 window — keyed by
+    * `user_id` or by `(iteration, user_id)` — is satisfied by it, so stage
+    * 3 stays shuffle-free (PlanAuditSpec pins it). Net plan: 1
+    * REPARTITION_BY_COL total where there were 1 ENSURE + one
+    * REPARTITION_BY_COL per iteration.
     */
   def alignRepaired(repaired: DataFrame): DataFrame =
     repaired.repartition(col("user_id"))
@@ -164,23 +165,28 @@ object ConsumePipeline {
   }
 
   /** Stage 3 (`3-basedata_df_final_query.sql`): newer-version-exists
-    * detection (J6) → invalid-id anti join (J7, keys non-null by
-    * construction so the broadcastable `left_anti` plan is safe) →
-    * price-change history for the month window (W3/W4 + U2).
+    * detection (J6) → invalid-id filter (J7) → price-change history for the
+    * month window (W3/W4 + U2), all in one pass over `base`.
+    *
+    * `keys` is the entity: `user_id` for one iteration's frame, `(iteration,
+    * user_id)` for the tagged frame of every iteration at once. J6's two
+    * CTE groupBys and J7's anti join (`3-basedata_df_final_query.sql:1-42`)
+    * become two `max` windows over the keys and a filter: a user whose
+    * latest purchase is older than their latest event is dropped. Users
+    * with no purchase have a null `f_max`, and `null < all_max` keeps them,
+    * exactly like the missing left-join row did. Every window here is
+    * partitioned by the keys (plus columns), so data hash-partitioned on
+    * `user_id` needs no exchange.
     */
-  def baseFinal(base: DataFrame, monthStart: String, monthEnd: String): DataFrame = {
-    // J6 fused: one conditional aggregation replaces the reference's two
-    // CTE groupBys + left join (`3-basedata_df_final_query.sql:1-29`).
-    // Same semantics: users with no purchase have null f_max, and
-    // `null < all_max` fails exactly like the missing left-join row did.
-    val invalid = base.groupBy(col("user_id"))
-      .agg(
-        max(when(col("event_type") === "purchase", col("ts"))).as("f_max"),
-        max(col("ts")).as("all_max"))
-      .filter(col("f_max") < col("all_max"))
-      .select(col("user_id").as("invalid_user_id"))
-    val valid = Joins.antiJoin(base, invalid, col("user_id") === col("invalid_user_id"))
-    PriceChange.history(valid, key = col("user_id"), price = col("value"),
+  def baseFinal(base: DataFrame, monthStart: String, monthEnd: String,
+                keys: Seq[Column] = Seq(col("user_id"))): DataFrame = {
+    val byKeys = Window.partitionBy(keys: _*)
+    val valid = base
+      .withColumn("__f_max", max(when(col("event_type") === "purchase", col("ts"))).over(byKeys))
+      .withColumn("__all_max", max(col("ts")).over(byKeys))
+      .filter(!coalesce(col("__f_max") < col("__all_max"), lit(false)))
+      .drop("__f_max", "__all_max")
+    PriceChange.history(valid, keys = keys, price = col("value"),
       ts = col("ts"), tiebreak = Seq(col("event_id").desc, col("event_type").desc),
       monthStart = monthStart, monthEnd = monthEnd)
   }
@@ -208,40 +214,38 @@ object ConsumePipeline {
     "c_mktsegment", "price_src", "geoid", "n_name", "partition_month",
     "iteration")
 
-  /** One composition's per-iteration frames (iteration name and frame, in
-    * loop order) and the release of every block [[compose]] cached.
+  /** One composition's output — every iteration's rows, tagged by their
+    * `iteration` column and cached — and the release of every block
+    * [[compose]] cached.
     */
-  final case class Composed(frames: Seq[(String, DataFrame)], release: () => Unit)
+  final case class Composed(all: DataFrame, release: () => Unit)
 
   /** The consume stages composed ONCE, for both entry points ([[build]] and
     * [[ConsumeJob.run]]) — the only place that caches and releases their
     * frames.
     *
-    * Cached for the whole job: the CDC stream (the repair's two branches
-    * and the fused side aggregation read it; C1, `script/main.py:125`),
-    * the repaired stream, the [[SideInputs]], and `base1All` — stage 1
-    * computed ONCE over the [[alignRepaired]] stream. Stage 1 is
-    * iteration-INVARIANT: the day-dedup window partitions by user_id and
-    * every iteration filter is a per-user predicate, so filtering before or
-    * after the window is equivalent (the reference re-runs stage 1 per loop
-    * pass, `script/main.py:305-324`). Per iteration, `b2` (stage 2 over the
-    * filtered `base1All`) is cached too: stage 3 reads it four times and
-    * the exports again; the filter and the broadcast side joins preserve
-    * `base1All`'s user_id layout, so it lands aligned with no per-iteration
-    * exchange.
+    * The reference re-runs stages 1–3 per (country × distribution) loop row
+    * (`script/main.py:305-346`). Here every stage runs once for all
+    * iterations: stage 1 runs over the [[alignRepaired]] stream, and each
+    * of its rows is tagged with the name of every iteration whose filter it
+    * matches (`explode`, so a row matching two overlapping filters appears
+    * under both). Stage 2 runs on the tagged rows, stage 3 is keyed by
+    * `(iteration, user_id)` so each iteration's invalid-id rule and price
+    * history see only that iteration's rows, and `modify` follows. Stage 1
+    * being iteration-invariant rests on the iteration filters being
+    * per-user predicates: the day-dedup window partitions by user_id.
     *
-    * The reference unpersists BaseDataFirst inside its loop, so its
-    * accumulated union recomputes stage-1 lineage at the final write
-    * (`script/main.py:324,370`, SURVEY §3.3). Here every cache lives until
-    * the caller's last action; `release` then drops them all.
+    * Two frames are cached: the CDC stream (the repair's branches and the
+    * fused side aggregation read it; C1, `script/main.py:125`) and the
+    * output, with `iteration` as its last column. `each` runs the caller's
+    * per-iteration actions in loop order, like the reference's loop body
+    * (`script/main.py:305-393`), on `all.filter(iteration === name)`: the
+    * first action builds the output cache and every later one reads it.
+    * An `each` that throws releases both caches before the error
+    * propagates; otherwise they live until the caller's `release`.
     *
     * `baseDataDrop` (dotted paths allowed) drops from the stage-3 result
-    * BEFORE `modify`; `geoDrop` drops inside [[modify]]. `each` runs the
-    * caller's per-iteration actions on each frame as soon as it is
-    * composed, like the reference's loop body (`script/main.py:305-393`):
-    * `.cache()` plans the cached frame when it is called, from the
-    * statistics of whatever is materialised by then, so the next
-    * iteration's `b2` must be cached after this iteration's actions ran.
+    * BEFORE `modify`; `geoDrop` drops inside [[modify]].
     */
   def compose(spark: SparkSession, dir: String, params: ConsumeParams,
               baseDataDrop: Seq[String] = Nil, geoDrop: Seq[String] = Nil,
@@ -251,33 +255,27 @@ object ConsumePipeline {
     val orders = Tables.orders(spark, dir)
     val nation = Tables.nation(spark, dir)
 
-    val repaired = repairCdc(events).cache()
-    val side = SideInputs(orders, events, params.activityFrom, params.activityTo).cache()
-    val base1All = baseFirst(alignRepaired(repaired), customer).cache()
-    val perIteration = params.iterations.map { it =>
-      val b2 = enrich(base1All.filter(it.filter), side).cache()
-      val b3 = baseFinal(b2, params.monthStart, params.monthEnd)
-      val kept = if (baseDataDrop.isEmpty) b3 else Reshape.dropPaths(b3, baseDataDrop)
-      val out = modify(kept, nation, geoDrop).withColumn("iteration", lit(it.name))
-      each(it.name, out)
-      (it.name, out, b2)
-    }
-    Composed(perIteration.map { case (name, out, _) => (name, out) }, () => {
-      perIteration.foreach(_._3.unpersist())
-      base1All.unpersist()
-      side.unpersist()
-      repaired.unpersist()
-      events.unpersist()
-    })
+    val side = SideInputs(orders, events, params.activityFrom, params.activityTo)
+    val tags = params.iterations.map(it => when(it.filter, lit(it.name)))
+    val base1 = baseFirst(alignRepaired(repairCdc(events)), customer)
+      .withColumn("iteration", explode(filter(array(tags: _*), _.isNotNull)))
+    val b3 = baseFinal(enrich(base1, side), params.monthStart, params.monthEnd,
+      keys = Seq(col("iteration"), col("user_id")))
+    val kept = if (baseDataDrop.isEmpty) b3 else Reshape.dropPaths(b3, baseDataDrop)
+    val out = modify(kept, nation, geoDrop)
+    val all = out.select((out.columns.filterNot(_ == "iteration") :+ "iteration").map(col): _*)
+      .cache()
+    val release: () => Unit = () => { all.unpersist(); events.unpersist() }
+    try params.iterations.foreach(it => each(it.name, all.filter(col("iteration") === it.name)))
+    catch { case e: Throwable => release(); throw e }
+    Composed(all, release)
   }
 
   /** Full composed pipeline as one lazy DataFrame (no sinks): [[compose]]'s
-    * frames projected to [[outputCols]] and union-accumulated (U3). Its
-    * caches stay registered, so repeated actions on the result reuse them.
+    * output projected to [[outputCols]]. Its caches stay registered, so
+    * repeated actions on the result reuse them.
     */
   def build(spark: SparkSession, dir: String,
             params: ConsumeParams = ConsumeParams()): DataFrame =
-    compose(spark, dir, params).frames
-      .map { case (_, out) => out.select(outputCols.map(col): _*) }
-      .reduce(_ unionByName _)
+    compose(spark, dir, params).all.select(outputCols.map(col): _*)
 }

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import graft.pipeline.{ConsumeJob, ConsumePipeline, ConsumeSqlPipeline}
+import graft.pipeline.{ConsumeJob, ConsumeParams, ConsumePipeline, ConsumeSqlPipeline,
+  IterationSpec}
 
 /** The SQL-template pipeline and the sink entry point must be
   * row-identical to the DataFrame pipeline — same stages, three execution
@@ -14,14 +15,15 @@ class ConsumeSqlSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  // multiset compare on collected rows (combining the two plans in one
+  // exceptAll trips DeduplicateRelations on the temp-view plan)
+  private def multiset(d: DataFrame) =
+    d.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+
   test("SQL-template pipeline is row-identical to the DataFrame pipeline") {
     val df = ConsumePipeline.build(spark, sf)
     val sql = ConsumeSqlPipeline.build(spark, sf)
     assert(df.columns.toSeq == sql.columns.toSeq)
-    // multiset compare on collected rows (combining the two plans in one
-    // exceptAll trips DeduplicateRelations on the temp-view plan)
-    def multiset(d: DataFrame) =
-      d.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
     val (a, b) = (multiset(df), multiset(sql))
     assert(a.nonEmpty)
     assert(a == b)
@@ -34,6 +36,27 @@ class ConsumeSqlSpec extends SparkSpec {
     def types(d: DataFrame) = d.schema.map(f => f.name -> f.dataType)
     assert(types(table) == types(df))
     assert(multiset(table) == a)
+  }
+
+  test("overlapping iterations: a row matching two filters lands under both names") {
+    // HOUSEHOLD is in both slices; the SQL mode runs each iteration's
+    // stages on its own filtered view, the DataFrame mode tags every row
+    // with each iteration it matches and runs the stages once (at sf0.001
+    // only BUILDING, HOUSEHOLD and FURNITURE users reach the output)
+    val params = ConsumeParams(iterations = Seq(
+      IterationSpec.bySegments("a", Seq("BUILDING", "HOUSEHOLD")),
+      IterationSpec.bySegments("b", Seq("HOUSEHOLD", "FURNITURE"))))
+    val df = ConsumePipeline.build(spark, sf, params)
+    val sql = ConsumeSqlPipeline.build(spark, sf, params)
+    assert(df.columns.toSeq == sql.columns.toSeq)
+    val rows = multiset(df)
+    assert(rows.nonEmpty)
+    assert(rows == multiset(sql))
+    // a HOUSEHOLD user's rows are the same under both names
+    val shared = df.filter(col("c_mktsegment") === "HOUSEHOLD")
+    val underA = multiset(shared.filter(col("iteration") === "a").drop("iteration"))
+    assert(underA.nonEmpty, "no HOUSEHOLD user survives the pipeline")
+    assert(underA == multiset(shared.filter(col("iteration") === "b").drop("iteration")))
   }
 
   test("templates interpolate with str.format semantics (escaped braces kept)") {

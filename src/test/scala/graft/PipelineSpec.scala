@@ -1,6 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import graft.pipeline.{ConsumeJob, ConsumeParams, ConsumePipeline, IterationSpec}
 import java.nio.file.Files
 
@@ -64,6 +70,24 @@ class PipelineSpec extends SparkSpec {
       "persistent RDDs leaked")
     assert(sentinel.storageLevel.useMemory, "a cache the job did not own was released")
     sentinel.unpersist()
+    assert(spark.sharedState.cacheManager.isEmpty, "cached entries leaked")
+  }
+
+  test("an export that throws releases every block the composition cached") {
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val seen = scala.collection.mutable.ArrayBuffer[String]()
+    val err = intercept[IllegalStateException] {
+      ConsumePipeline.compose(spark, sf, ConsumeParams(), each = (name, out) => {
+        seen += name
+        out.count()
+        if (seen.size == 2) throw new IllegalStateException(s"export $name failed")
+      })
+    }
+    assert(err.getMessage == "export it2 failed")
+    assert(seen == Seq("it1", "it2"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore,
+      "persistent RDDs leaked")
     assert(spark.sharedState.cacheManager.isEmpty, "cached entries leaked")
   }
 
@@ -136,12 +160,12 @@ class PipelineSpec extends SparkSpec {
 
     // capture every action's executed plan: the cache-lifecycle assertion
     // below reads the FINAL table write's plan
-    val plans = scala.collection.mutable.ArrayBuffer[String]()
+    val plans = scala.collection.mutable.ArrayBuffer[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              durationNs: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString }
+        plans.synchronized { plans += qe.executedPlan }
       override def onFailure(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              exception: Exception): Unit = ()
@@ -223,22 +247,36 @@ class PipelineSpec extends SparkSpec {
       // THE §3.3 LIFECYCLE ASSERT: the reference unpersists BaseDataFirst
       // before the final catalog write, so its accumulated union RECOMPUTES
       // stage-1 lineage per iteration (script/main.py:370 + SURVEY §3.3).
-      // Our orchestration holds the stage caches until after the final
-      // action — so the union write's plan must read every one of the 4
-      // branches from cache (InMemoryTableScan), not recompute it.
+      // Our orchestration caches the composed output of every iteration and
+      // holds it until after the final action — so the table write must
+      // read that cache (InMemoryTableScan over the written columns) and
+      // recompute nothing: outside the cache boundary its plan has no
+      // Window, Exchange or SortMergeJoin.
       // the listener is async — wait for the table write's plan to land
-      def tableWrite: Option[String] = plans.synchronized {
-        plans.find(p => p.contains("InsertIntoHadoopFsRelation") &&
-          p.contains(s"$outDir/table"))
+      def tableWrite: Option[SparkPlan] = plans.synchronized {
+        plans.find { p =>
+          val s = p.toString
+          s.contains("InsertIntoHadoopFsRelation") && s.contains(s"$outDir/table")
+        }
       }
       val deadline = System.nanoTime() + 30L * 1000000000L
       while (tableWrite.isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
       val finalWrite = tableWrite
       assert(finalWrite.isDefined, "no captured table-write plan")
-      val scans = "InMemoryTableScan".r.findAllIn(finalWrite.get).size
-      assert(scans >= params.iterations.size,
-        s"final union write must hit the per-iteration caches " +
-          s"(got $scans InMemoryTableScan in\n${finalWrite.get.take(2000)})")
+      // every node outside cache boundaries (InMemoryTableScanExec is a
+      // leaf; the helper descends into adaptive plans and query stages)
+      val write = finalWrite.get
+      val nodes = new AdaptiveSparkPlanHelper {}.collect(write) { case p => p }
+      val scans = nodes.collect { case s: InMemoryTableScanExec => s }
+      assert(scans.exists(_.relation.output.map(_.name) == result.columns.toSeq),
+        s"the table write must read the output cache:\n$write")
+      val recomputed = nodes.filter {
+        case _: WindowExec | _: Exchange | _: SortMergeJoinExec => true
+        case _ => false
+      }
+      assert(recomputed.isEmpty,
+        s"the table write recomputes outside the output cache " +
+          s"(${recomputed.map(_.nodeName).mkString(", ")}):\n$write")
     } finally spark.listenerManager.unregister(listener)
   }
 

@@ -100,11 +100,12 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("price-change branches reuse the upstream key partitioning (no new exchange)") {
-    // Both W3 (key, price) and W4 (key) windows are satisfied by data
-    // already hash-partitioned on the key — hashpartitioning(k) clusters any
-    // superset key set — so over a cached stage-2 frame the whole operator
-    // must add ZERO exchanges: local sorts only. This is the 100 TB-critical
-    // property: the month-history pass costs no extra shuffle of the corpus.
+    // Both W3 (key, price, in-month) and W4 (key, in-month) windows are
+    // satisfied by data already hash-partitioned on the key —
+    // hashpartitioning(k) clusters any superset key set — so the whole
+    // operator must add ZERO exchanges: local sorts only. This is the
+    // 100 TB-critical property: the month-history pass costs no extra
+    // shuffle of the corpus.
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -116,26 +117,27 @@ class PlanAuditSpec extends SparkSpec {
         Seq(col("tb").desc), monthStart = "1996-01-01", monthEnd = "1996-02-01")
       val p = plan(hist)
       val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
-      // exactly the two upstream repartitions (one per union branch reading
-      // the same frame, uncached here) — the windows themselves add none; a
-      // (k, price) re-exchange in the W3 branch would make this 3
-      assert(exchanges == 2, s"windows added exchanges beyond the input's:\n$p")
+      // exactly the one upstream repartition: both windows run in one pass
+      // over the frame, and neither adds an exchange; a (k, price)
+      // re-exchange for W3 would make this 2
+      assert(exchanges == 1, s"windows added exchanges beyond the input's:\n$p")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
   test("consume pipeline: stage 3 runs shuffle-free over the aligned cache (exchange audit)") {
-    // The r3→r4 open audit item: stage 3 reads cached base2 four times
-    // (invalid-id aggregation, anti join, both price-history window
-    // branches). Aligning the cache on user_id (ConsumePipeline.build)
-    // moves the ONLY hash exchange inside the cache-materialization plan —
-    // every consumer then satisfies its distribution from the cached
-    // layout. Machine-checked two ways:
+    // Stage 3 is one pass of windows keyed by (iteration, user_id): the
+    // invalid-id maxima and both price-history row numbers. Aligning the
+    // repaired stream on user_id (ConsumePipeline.alignRepaired) makes that
+    // REPARTITION_BY_COL the only user_id exchange, and every window
+    // downstream satisfies its distribution from that layout. Since
+    // ConsumePipeline.build reads the composition's cached output, the
+    // whole pipeline sits inside one cache. Machine-checked two ways:
     //  (a) the executed plan OUTSIDE cache boundaries has ZERO shuffle
     //      exchanges (InMemoryTableScanExec is a leaf, so a plain collect
-    //      sees exactly the post-cache region — the 100 TB property: the
-    //      whole stage-3 + modify tree costs no corpus shuffle), and
-    //  (b) the cached base2 plan itself carries the single deliberate
-    //      REPARTITION_BY_COL exchange that pays for it.
+    //      sees exactly the post-cache region: reading the output costs no
+    //      corpus shuffle), and
+    //  (b) the cached output plan itself carries the single deliberate
+    //      REPARTITION_BY_COL exchange that pays for the alignment.
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
@@ -150,7 +152,10 @@ class PlanAuditSpec extends SparkSpec {
         case s: InMemoryTableScanExec => s.relation.cachedPlan.toString
       }
       assert(cachedPlans.exists(_.contains("REPARTITION_BY_COL")),
-        "expected the user_id alignment exchange inside the base2 cache plan")
+        "expected the user_id alignment exchange inside the output cache plan")
+      // and stage 3's (iteration, user_id) windows add none inside it
+      assert(!cachedPlans.exists(_.contains("Exchange hashpartitioning(iteration")),
+        s"stage 3 re-shuffles on its iteration key:\n${cachedPlans.mkString("\n")}")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
