@@ -3610,7 +3610,7 @@ object SparkEntry {
     // W3/W4 + U2 (3-basedata_df_final_query.sql:44-72): price-change
     // history for one month window.
     "w3_price_change_history" -> { (s, dir) =>
-      PriceChange.history(Tables.lineitem(s, dir), key = col("l_orderkey"),
+      PriceChange.history(Tables.lineitem(s, dir), keys = Seq(col("l_orderkey")),
           price = col("l_extendedprice"), ts = col("l_shipdate"),
           tiebreak = Seq(col("l_linenumber").desc, col("l_partkey").desc),
           monthStart = "1998-06-01", monthEnd = "1998-07-01")
@@ -3694,7 +3694,8 @@ object SparkEntry {
     // The full composed 4-stage consume pipeline (SURVEY §3.3): CDC repair →
     // day-dedup + enrichment → activity/control/counter joins → invalid-id
     // filter + price-change history → geo broadcast, every iteration in one
-    // pass over rows tagged with their iterations.
+    // pass over rows tagged with their iterations. Uncached: the driver runs
+    // one action on it, and nothing stays registered with the cache manager.
     "pipe_consume_e2e" -> { (s, dir) => ConsumePipeline.build(s, dir) },
 
     // The same pipeline driven by the reference's execution mode: four

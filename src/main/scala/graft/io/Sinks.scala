@@ -8,9 +8,7 @@ import org.apache.spark.sql.functions._
   * Scale notes: the gzip JSON/CSV sinks mirror the reference's per-iteration
   * exports, which force a single file via `coalesce(1)` — fine for the
   * reference's small per-(country × distribution) exports, pathological at
-  * 100 TB. Both sinks therefore take `singleFile: Boolean` so bulk exports
-  * can keep one-file-per-partition parallelism; the default preserves the
-  * reference behaviour.
+  * 100 TB.
   */
 object Sinks {
 
@@ -26,17 +24,15 @@ object Sinks {
     * the nested-struct frame (built by `Reshape.nestSchema`); nesting is the
     * caller's choice — this sink only owns format/compression/layout.
     */
-  def gzipJson(df: DataFrame, path: String, singleFile: Boolean = true): Unit =
-    (if (singleFile) df.coalesce(1) else df)
-      .write.mode("overwrite").option("compression", "gzip")
+  def gzipJson(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").option("compression", "gzip")
       .option("timestampFormat", losslessTs).json(path)
 
   /** K2 (`script/main.py:386-393`): gzip CSV export with header, single
     * file via `coalesce(1)` like the reference.
     */
-  def gzipCsv(df: DataFrame, path: String, singleFile: Boolean = true): Unit =
-    (if (singleFile) df.coalesce(1) else df)
-      .write.mode("overwrite")
+  def gzipCsv(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite")
       .option("compression", "gzip").option("header", "true")
       .option("timestampFormat", losslessTs).csv(path)
 

@@ -22,17 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object PriceChange {
 
-  /** One entity key: the single-key form of the operator below. */
-  def history(
-      df: DataFrame,
-      key: Column,
-      price: Column,
-      ts: Column,
-      tiebreak: Seq[Column],
-      monthStart: String,
-      monthEnd: String): DataFrame =
-    history(df, Seq(key), price, ts, tiebreak, monthStart, monthEnd)
-
   /** @param keys       the entity key (several columns for a composite key).
     * @param monthStart inclusive; @param monthEnd exclusive.
     * @param tiebreak   unique descending tiebreaker for deterministic picks.

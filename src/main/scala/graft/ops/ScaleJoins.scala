@@ -155,7 +155,7 @@ object ScaleJoins {
     // join key (bucket, gb) only) leaves the gb column's g blocks on ONE
     // key, capping tasks at |B|²/salt instead of |B|²/salt²; the skew
     // harness measured the difference at 16.4 s vs 1.4 s max-task on a 10%
-    // hot bucket (tools/SkewBench). Replication cost: ~(salt+1)/2× per
+    // hot bucket (SCALE.md). Replication cost: ~(salt+1)/2× per
     // side (vs one-sided's (salt+1)/2× on a alone) — the standard
     // 1-Bucket-Theta trade of shuffle volume for a true per-task cap.
     val a = side("_a").withColumn("__ga", col("__g_a"))

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.io.{JobConfig, Sinks}
 import graft.ops.Reshape
@@ -12,10 +13,10 @@ import graft.ops.Reshape
   *
   * Mirrors the reference's action schedule: the two per-iteration exports
   * run inside the loop, in loop order; the accumulated rows are written
-  * once at the end. The first export builds the composition's output
-  * cache; the later exports and the table write read it. Both of its
-  * caches (the CDC stream and the output) are released after the table
-  * write, or as soon as an export or the write throws.
+  * once at the end. All of it runs inside the `compose` loan: the first
+  * export builds the output cache, the later exports and the table write
+  * read it, and the loan releases both of its caches (the CDC stream and
+  * the output) when the write returns or anything in the loan throws.
   */
 object ConsumeJob {
 
@@ -48,31 +49,33 @@ object ConsumeJob {
     // config-driven drops (`script/main.py:186,349-351`): the base-data drop
     // before modify and the geo drop inside it shape the accumulated table
     // AND both exports
-    val job = ConsumePipeline.compose(spark, dir, params,
-      baseDataDrop = cfg.fold(Seq.empty[String])(_.colsToDropBaseData),
-      geoDrop = cfg.fold(Seq.empty[String])(_.geoDropColumns),
-      each = (name, out) => cfg match {
-        case Some(c) =>
-          // config-driven export shapes (`script/main.py:372-393`): one
-          // common drop list for both file exports; the JSON branch
-          // additionally applies the prefix-family whitelist and re-nests
-          val exportBase = Reshape.dropPaths(out, c.colsToDropJson)
-          val json = Reshape.nestSchema(Reshape.dropPrefixedExcept(
-            exportBase, c.jsonDropPrefixes, c.colsToKeep.toSet))
-          Sinks.gzipJson(json, s"$outDir/json/$name$dateKey")
-          Sinks.gzipCsv(exportBase, s"$outDir/csv/$name$dateKey")
-        case None =>
-          // K1: nested gzip JSON export (flat names re-nested on '_', F8).
-          val json = Reshape.nestSchema(out.select("user_id", "event_type",
-            "price_src", "partition_month", "n_name", "n_clicks", "n_views"))
-          Sinks.gzipJson(json, s"$outDir/json/$name$dateKey")
-          // K2: flat gzip CSV export.
-          Sinks.gzipCsv(out.drop("props"), s"$outDir/csv/$name$dateKey")
-      })
-
-    // K3: delete-insert of the month partitions present in the result.
-    try Sinks.overwritePartitions(job.all, s"$outDir/table", "partition_month")
-    finally job.release()
-    job.all
+    ConsumePipeline.compose(spark, dir, params,
+        baseDataDrop = cfg.fold(Seq.empty[String])(_.colsToDropBaseData),
+        geoDrop = cfg.fold(Seq.empty[String])(_.geoDropColumns)) { all =>
+      params.iterations.map(_.name).foreach { name =>
+        val out = all.filter(col("iteration") === name)
+        cfg match {
+          case Some(c) =>
+            // config-driven export shapes (`script/main.py:372-393`): one
+            // common drop list for both file exports; the JSON branch
+            // additionally applies the prefix-family whitelist and re-nests
+            val exportBase = Reshape.dropPaths(out, c.colsToDropJson)
+            val json = Reshape.nestSchema(Reshape.dropPrefixedExcept(
+              exportBase, c.jsonDropPrefixes, c.colsToKeep.toSet))
+            Sinks.gzipJson(json, s"$outDir/json/$name$dateKey")
+            Sinks.gzipCsv(exportBase, s"$outDir/csv/$name$dateKey")
+          case None =>
+            // K1: nested gzip JSON export (flat names re-nested on '_', F8).
+            val json = Reshape.nestSchema(out.select("user_id", "event_type",
+              "price_src", "partition_month", "n_name", "n_clicks", "n_views"))
+            Sinks.gzipJson(json, s"$outDir/json/$name$dateKey")
+            // K2: flat gzip CSV export.
+            Sinks.gzipCsv(out.drop("props"), s"$outDir/csv/$name$dateKey")
+        }
+      }
+      // K3: delete-insert of the month partitions present in the result.
+      Sinks.overwritePartitions(all, s"$outDir/table", "partition_month")
+      all
+    }
   }
 }

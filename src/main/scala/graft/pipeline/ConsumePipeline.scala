@@ -214,15 +214,9 @@ object ConsumePipeline {
     "c_mktsegment", "price_src", "geoid", "n_name", "partition_month",
     "iteration")
 
-  /** One composition's output — every iteration's rows, tagged by their
-    * `iteration` column and cached — and the release of every block
-    * [[compose]] cached.
-    */
-  final case class Composed(all: DataFrame, release: () => Unit)
-
-  /** The consume stages composed ONCE, for both entry points ([[build]] and
-    * [[ConsumeJob.run]]) — the only place that caches and releases their
-    * frames.
+  /** The consume stages composed ONCE, for both entry points ([[compose]]
+    * and [[build]]): every iteration's output rows over `events`, tagged by
+    * their `iteration` column, which comes last.
     *
     * The reference re-runs stages 1–3 per (country × distribution) loop row
     * (`script/main.py:305-346`). Here every stage runs once for all
@@ -235,47 +229,54 @@ object ConsumePipeline {
     * being iteration-invariant rests on the iteration filters being
     * per-user predicates: the day-dedup window partitions by user_id.
     *
-    * Two frames are cached: the CDC stream (the repair's branches and the
-    * fused side aggregation read it; C1, `script/main.py:125`) and the
-    * output, with `iteration` as its last column. `each` runs the caller's
-    * per-iteration actions in loop order, like the reference's loop body
-    * (`script/main.py:305-393`), on `all.filter(iteration === name)`: the
-    * first action builds the output cache and every later one reads it.
-    * An `each` that throws releases both caches before the error
-    * propagates; otherwise they live until the caller's `release`.
-    *
     * `baseDataDrop` (dotted paths allowed) drops from the stage-3 result
     * BEFORE `modify`; `geoDrop` drops inside [[modify]].
     */
-  def compose(spark: SparkSession, dir: String, params: ConsumeParams,
-              baseDataDrop: Seq[String] = Nil, geoDrop: Seq[String] = Nil,
-              each: (String, DataFrame) => Unit = (_, _) => ()): Composed = {
-    val events = Tables.events(spark, dir).cache()
-    val customer = Tables.customer(spark, dir)
-    val orders = Tables.orders(spark, dir)
-    val nation = Tables.nation(spark, dir)
-
-    val side = SideInputs(orders, events, params.activityFrom, params.activityTo)
+  private def frames(spark: SparkSession, dir: String, events: DataFrame,
+                     params: ConsumeParams, baseDataDrop: Seq[String],
+                     geoDrop: Seq[String]): DataFrame = {
+    val side = SideInputs(Tables.orders(spark, dir), events,
+      params.activityFrom, params.activityTo)
     val tags = params.iterations.map(it => when(it.filter, lit(it.name)))
-    val base1 = baseFirst(alignRepaired(repairCdc(events)), customer)
+    val base1 = baseFirst(alignRepaired(repairCdc(events)), Tables.customer(spark, dir))
       .withColumn("iteration", explode(filter(array(tags: _*), _.isNotNull)))
     val b3 = baseFinal(enrich(base1, side), params.monthStart, params.monthEnd,
       keys = Seq(col("iteration"), col("user_id")))
     val kept = if (baseDataDrop.isEmpty) b3 else Reshape.dropPaths(b3, baseDataDrop)
-    val out = modify(kept, nation, geoDrop)
-    val all = out.select((out.columns.filterNot(_ == "iteration") :+ "iteration").map(col): _*)
-      .cache()
-    val release: () => Unit = () => { all.unpersist(); events.unpersist() }
-    try params.iterations.foreach(it => each(it.name, all.filter(col("iteration") === it.name)))
-    catch { case e: Throwable => release(); throw e }
-    Composed(all, release)
+    val out = modify(kept, Tables.nation(spark, dir), geoDrop)
+    out.select((out.columns.filterNot(_ == "iteration") :+ "iteration").map(col): _*)
   }
 
-  /** Full composed pipeline as one lazy DataFrame (no sinks): [[compose]]'s
-    * output projected to [[outputCols]]. Its caches stay registered, so
-    * repeated actions on the result reuse them.
+  /** The consume job's cache scope, as a loan: [[frames]] with the CDC
+    * stream and the output cached, handed to `use`, and both caches
+    * released when `use` returns or throws — the reference's
+    * cache/unpersist lifecycle (`script/main.py:125,324,370`).
+    *
+    * The CDC stream is cached because the repair's branches and the fused
+    * side aggregation both read it (C1); the output because the caller
+    * runs several actions on it, like the reference's per-iteration loop
+    * body (`script/main.py:305-393`): the first action builds the output
+    * cache and every later one reads it.
+    */
+  def compose[A](spark: SparkSession, dir: String, params: ConsumeParams,
+                 baseDataDrop: Seq[String] = Nil, geoDrop: Seq[String] = Nil)
+                (use: DataFrame => A): A = {
+    val events = Tables.events(spark, dir)
+    val all = frames(spark, dir, events, params, baseDataDrop, geoDrop)
+    // events first: caching `all` plans it, and that plan must read the
+    // events cache
+    events.cache()
+    all.cache()
+    try use(all) finally { all.unpersist(); events.unpersist() }
+  }
+
+  /** Full composed pipeline as one lazy DataFrame (no sinks, no caches):
+    * [[frames]] projected to [[outputCols]]. It leaves nothing registered
+    * with the cache manager, so a caller that runs several actions on it
+    * caches it itself.
     */
   def build(spark: SparkSession, dir: String,
             params: ConsumeParams = ConsumeParams()): DataFrame =
-    compose(spark, dir, params).all.select(outputCols.map(col): _*)
+    frames(spark, dir, Tables.events(spark, dir), params, Nil, Nil)
+      .select(outputCols.map(col): _*)
 }

@@ -102,6 +102,18 @@ object Bpe {
     learned.toSeq
   }
 
+  /** [[trainBatched]] truncates the state frame's LOGICAL lineage
+    * (localCheckpoint) every this many rounds. Each round's state is
+    * `select(mergePass…)` over the previous round's plan, so without
+    * truncation the analyzed tree grows by `batch` fold expressions per
+    * round and analysis/canonicalization cost per round grows linearly —
+    * quadratic over a 4k-merge run (the connected-components lineage
+    * hazard, in trainer form). 16 bounds the tree at ~16·batch folds;
+    * superseded checkpoints' blocks are freed as soon as the next one
+    * materializes.
+    */
+  private val CheckpointEvery = 16
+
   /** Batched BPE training (round 10; the standard scale practice — e.g.
     * SentencePiece's BPE trainer merges many pairs per scan): each round
     * selects the TOP-`batch` mutually symbol-disjoint pairs from one pair
@@ -129,28 +141,11 @@ object Bpe {
     * means one more round, never a wrong table) — fixed, so the t81 oracle
     * can replay the exact pool bound in SQL.
     */
-  /** @param checkpointEvery truncate the state frame's LOGICAL lineage
-    *        (localCheckpoint) every this many rounds. Each round's state
-    *        is `select(mergePass…)` over the previous round's plan, so
-    *        without truncation the analyzed tree grows by `batch` fold
-    *        expressions per round and analysis/canonicalization cost per
-    *        round grows linearly — quadratic over a 4k-merge run (the
-    *        connected-components lineage hazard, in trainer form). 16
-    *        bounds the tree at ~16·batch folds; superseded checkpoints'
-    *        blocks are freed as soon as the next one materializes.
-    */
-  /** @param logEvery print a `[bpe] round …` progress line (merges so far,
-    *        elapsed seconds) every this many rounds — the s/round curve a
-    *        scale rehearsal reads; 0 (default) is silent.
-    */
   def trainBatched(df: DataFrame, text: Column, nMerges: Int,
-                   minFreq: Long = 1L, batch: Int = 8,
-                   checkpointEvery: Int = 16,
-                   logEvery: Int = 0): Seq[(String, String, Long)] = {
+                   minFreq: Long = 1L, batch: Int = 8): Seq[(String, String, Long)] = {
     require(nMerges >= 1, "nMerges must be >= 1")
     require(batch >= 1, "batch must be >= 1")
     import org.apache.spark.storage.StorageLevel
-    val startNs = System.nanoTime()
     val words = df
       .select(explode(filter(split(lower(text), " "),
         w => length(w) > 0)).as("w"))
@@ -193,7 +188,7 @@ object Bpe {
         val merged = picks.foldLeft(col("syms")) {
           case (c, (a, b, _)) => mergePass(c, a, b)
         }
-        val truncate = checkpointEvery > 0 && (rounds + 1) % checkpointEvery == 0
+        val truncate = (rounds + 1) % CheckpointEvery == 0
         val projected = state.select(merged.as("syms"), col("freq"))
         val next =
           if (truncate) projected.localCheckpoint(false) // lazy: one job below
@@ -208,9 +203,6 @@ object Bpe {
         }
         state = next
         rounds += 1
-        if (logEvery > 0 && rounds % logEvery == 0)
-          System.err.println(f"[bpe] round $rounds merges=${learned.size} " +
-            f"elapsed=${(System.nanoTime() - startNs) / 1e9}%.1f s")
       }
     }
     }

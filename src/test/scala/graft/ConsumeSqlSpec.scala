@@ -20,22 +20,32 @@ class ConsumeSqlSpec extends SparkSpec {
   private def multiset(d: DataFrame) =
     d.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
 
+  // Both sides read one cached copy of the CDC stream: the per-user
+  // `click_value` double sum then adds its terms in the same order on each
+  // side, so the rows agree exactly, not just to within a few ulps.
+  private def withPinnedEvents[A](body: => A): A = {
+    val events = Tables.events(spark, sf).cache()
+    try body finally events.unpersist()
+  }
+
   test("SQL-template pipeline is row-identical to the DataFrame pipeline") {
-    val df = ConsumePipeline.build(spark, sf)
-    val sql = ConsumeSqlPipeline.build(spark, sf)
-    assert(df.columns.toSeq == sql.columns.toSeq)
-    val (a, b) = (multiset(df), multiset(sql))
-    assert(a.nonEmpty)
-    assert(a == b)
-    // the table ConsumeJob.run writes, read back in the pipeline's columns
-    val out = java.nio.file.Files.createTempDirectory("graft-consume-sql").toString
-    ConsumeJob.run(spark, sf, out)
-    val table = spark.read.parquet(s"$out/table")
-      .select(ConsumePipeline.outputCols.map(col): _*)
-    // parquet reads every column back nullable: compare names and types
-    def types(d: DataFrame) = d.schema.map(f => f.name -> f.dataType)
-    assert(types(table) == types(df))
-    assert(multiset(table) == a)
+    withPinnedEvents {
+      val df = ConsumePipeline.build(spark, sf)
+      val sql = ConsumeSqlPipeline.build(spark, sf)
+      assert(df.columns.toSeq == sql.columns.toSeq)
+      val (a, b) = (multiset(df), multiset(sql))
+      assert(a.nonEmpty)
+      assert(a == b)
+      // the table ConsumeJob.run writes, read back in the pipeline's columns
+      val out = java.nio.file.Files.createTempDirectory("graft-consume-sql").toString
+      ConsumeJob.run(spark, sf, out)
+      val table = spark.read.parquet(s"$out/table")
+        .select(ConsumePipeline.outputCols.map(col): _*)
+      // parquet reads every column back nullable: compare names and types
+      def types(d: DataFrame) = d.schema.map(f => f.name -> f.dataType)
+      assert(types(table) == types(df))
+      assert(multiset(table) == a)
+    }
   }
 
   test("overlapping iterations: a row matching two filters lands under both names") {
@@ -46,17 +56,19 @@ class ConsumeSqlSpec extends SparkSpec {
     val params = ConsumeParams(iterations = Seq(
       IterationSpec.bySegments("a", Seq("BUILDING", "HOUSEHOLD")),
       IterationSpec.bySegments("b", Seq("HOUSEHOLD", "FURNITURE"))))
-    val df = ConsumePipeline.build(spark, sf, params)
-    val sql = ConsumeSqlPipeline.build(spark, sf, params)
-    assert(df.columns.toSeq == sql.columns.toSeq)
-    val rows = multiset(df)
-    assert(rows.nonEmpty)
-    assert(rows == multiset(sql))
-    // a HOUSEHOLD user's rows are the same under both names
-    val shared = df.filter(col("c_mktsegment") === "HOUSEHOLD")
-    val underA = multiset(shared.filter(col("iteration") === "a").drop("iteration"))
-    assert(underA.nonEmpty, "no HOUSEHOLD user survives the pipeline")
-    assert(underA == multiset(shared.filter(col("iteration") === "b").drop("iteration")))
+    withPinnedEvents {
+      val df = ConsumePipeline.build(spark, sf, params)
+      val sql = ConsumeSqlPipeline.build(spark, sf, params)
+      assert(df.columns.toSeq == sql.columns.toSeq)
+      val rows = multiset(df)
+      assert(rows.nonEmpty)
+      assert(rows == multiset(sql))
+      // a HOUSEHOLD user's rows are the same under both names
+      val shared = df.filter(col("c_mktsegment") === "HOUSEHOLD")
+      val underA = multiset(shared.filter(col("iteration") === "a").drop("iteration"))
+      assert(underA.nonEmpty, "no HOUSEHOLD user survives the pipeline")
+      assert(underA == multiset(shared.filter(col("iteration") === "b").drop("iteration")))
+    }
   }
 
   test("templates interpolate with str.format semantics (escaped braces kept)") {

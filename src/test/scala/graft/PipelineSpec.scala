@@ -78,14 +78,25 @@ class PipelineSpec extends SparkSpec {
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     val seen = scala.collection.mutable.ArrayBuffer[String]()
     val err = intercept[IllegalStateException] {
-      ConsumePipeline.compose(spark, sf, ConsumeParams(), each = (name, out) => {
-        seen += name
-        out.count()
-        if (seen.size == 2) throw new IllegalStateException(s"export $name failed")
-      })
+      ConsumePipeline.compose(spark, sf, ConsumeParams()) { all =>
+        ConsumeParams().iterations.map(_.name).foreach { name =>
+          seen += name
+          all.filter(col("iteration") === name).count()
+          if (seen.size == 2) throw new IllegalStateException(s"export $name failed")
+        }
+      }
     }
     assert(err.getMessage == "export it2 failed")
     assert(seen == Seq("it1", "it2"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore,
+      "persistent RDDs leaked")
+    assert(spark.sharedState.cacheManager.isEmpty, "cached entries leaked")
+  }
+
+  test("ConsumePipeline.build caches nothing") {
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    assert(ConsumePipeline.build(spark, sf).count() > 0)
     assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore,
       "persistent RDDs leaked")
     assert(spark.sharedState.cacheManager.isEmpty, "cached entries leaked")

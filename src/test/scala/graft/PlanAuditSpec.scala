@@ -113,7 +113,7 @@ class PlanAuditSpec extends SparkSpec {
         .select(col("l_orderkey").as("k"), col("l_extendedprice").as("price"),
           col("l_shipdate").cast("timestamp").as("ts"), col("l_linenumber").as("tb"))
         .repartition(col("k")) // stands in for stage 2's join partitioning
-      val hist = ops.PriceChange.history(base, col("k"), col("price"), col("ts"),
+      val hist = ops.PriceChange.history(base, Seq(col("k")), col("price"), col("ts"),
         Seq(col("tb").desc), monthStart = "1996-01-01", monthEnd = "1996-02-01")
       val p = plan(hist)
       val exchanges = "Exchange hashpartitioning".r.findAllIn(p).length
@@ -128,34 +128,44 @@ class PlanAuditSpec extends SparkSpec {
     // Stage 3 is one pass of windows keyed by (iteration, user_id): the
     // invalid-id maxima and both price-history row numbers. Aligning the
     // repaired stream on user_id (ConsumePipeline.alignRepaired) makes that
-    // REPARTITION_BY_COL the only user_id exchange, and every window
-    // downstream satisfies its distribution from that layout. Since
-    // ConsumePipeline.build reads the composition's cached output, the
-    // whole pipeline sits inside one cache. Machine-checked two ways:
-    //  (a) the executed plan OUTSIDE cache boundaries has ZERO shuffle
-    //      exchanges (InMemoryTableScanExec is a leaf, so a plain collect
-    //      sees exactly the post-cache region: reading the output costs no
-    //      corpus shuffle), and
-    //  (b) the cached output plan itself carries the single deliberate
-    //      REPARTITION_BY_COL exchange that pays for the alignment.
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // REPARTITION_BY_COL the only user_id exchange the stages above it
+    // need: stage 1's day-dedup window, the stage-3 windows and everything
+    // up to modify's output run over that layout. Machine-checked on the
+    // executed plan of pipe_consume_e2e:
+    //  (a) it holds exactly one REPARTITION_BY_COL exchange and no
+    //      exchange keyed on `iteration`, and
+    //  (b) no shuffle exchange sits between that alignment exchange and
+    //      any window above it or the plan's root (modify's output).
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    def isAlignment(p: SparkPlan) = p match {
+      case s: ShuffleExchangeExec => s.shuffleOrigin == REPARTITION_BY_COL
+      case _ => false
+    }
+    // the nodes from `p` down to (not including) the alignment exchange
+    def pathToAlignment(p: SparkPlan): Option[Seq[SparkPlan]] =
+      if (isAlignment(p)) Some(Nil)
+      else p.children.iterator.flatMap(pathToAlignment).nextOption().map(p +: _)
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try withProductionInputs {
-      val df = SparkEntry.queries("pipe_consume_e2e")(spark, sf)
-      val physical = df.queryExecution.executedPlan
-      val shuffles = physical.collect { case s: ShuffleExchangeExec => s }
-      assert(shuffles.isEmpty,
-        s"stage 3/modify re-shuffles the cached corpus:\n${shuffles.mkString("\n")}")
-      val cachedPlans = physical.collect {
-        case s: InMemoryTableScanExec => s.relation.cachedPlan.toString
+      val physical = SparkEntry.queries("pipe_consume_e2e")(spark, sf)
+        .queryExecution.executedPlan
+      assert(physical.collect { case p if isAlignment(p) => p }.size == 1,
+        s"expected exactly one user_id alignment exchange:\n$physical")
+      assert(!physical.toString.contains("Exchange hashpartitioning(iteration"),
+        s"stage 3 re-shuffles on its iteration key:\n$physical")
+      val above = (physical +: physical.collect { case w: WindowExec => w })
+        .flatMap(n => pathToAlignment(n).map(n -> _))
+      // the root, stage 1's day-dedup window and stage 3's three windows
+      // (the CDC repair's window runs below the alignment)
+      assert(above.size == 5, s"expected 4 windows above the alignment:\n$physical")
+      above.foreach { case (node, path) =>
+        val shuffles = path.collect { case s: ShuffleExchangeExec => s }
+        assert(shuffles.isEmpty,
+          s"${node.nodeName} re-shuffles the aligned stream:\n${shuffles.mkString("\n")}")
       }
-      assert(cachedPlans.exists(_.contains("REPARTITION_BY_COL")),
-        "expected the user_id alignment exchange inside the output cache plan")
-      // and stage 3's (iteration, user_id) windows add none inside it
-      assert(!cachedPlans.exists(_.contains("Exchange hashpartitioning(iteration")),
-        s"stage 3 re-shuffles on its iteration key:\n${cachedPlans.mkString("\n")}")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
