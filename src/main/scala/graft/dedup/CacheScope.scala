@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 
 /** Scoped tracking for the DataFrames this library persists ON BEHALF OF a
   * caller (the shingle-set / signature prep frames in [[MinHashLSH]], the
-  * edge frame in [[Clusters.connectedComponents]]): their lifecycle is
+  * edge frame in [[Clusters.connectedComponents]], the views of
+  * [[graft.pipeline.ConsumeSqlPipeline]]): their lifecycle is
   * caller-owned because the results are lazy — the caches must outlive the
   * result's materialization — so a LOOPING caller (the streaming near-dup
   * ingest gate runs one gate invocation per trigger, forever) has to

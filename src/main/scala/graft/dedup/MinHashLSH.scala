@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 /** MinHash + LSH near-duplicate detection over text — the scale path for
   * fuzzy dedup (the exact all-pairs baseline in [[Jaccard]] is quadratic).
   *
-  * Pipeline: word-shingle → k min-hashes (one shuffle: explode + partial
-  * min-aggregate) → band → bucket self-join (shuffle on band hash; only
-  * colliding docs meet) → exact-Jaccard verification of the candidates.
+  * Pipeline: word-shingle → hashed shingle set + k min-hashes (one cached
+  * projection; each document tokenizes once) → band → bucket self-join
+  * (shuffle on band hash; only colliding docs meet) → exact-Jaccard
+  * verification of the candidates.
   *
   * Scale notes:
   *  - The only quadratic work is INSIDE buckets; band/row counts (b×r=k)
@@ -30,57 +31,66 @@ object MinHashLSH {
 
   /** Word n-gram shingles of the lower-cased text; a doc shorter than n
     * tokens contributes its whole text as one shingle.
-    */
-  def wordShingles(text: Column, n: Int): Column = {
-    val toks = split(lower(text), " ")
-    when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-      .otherwise(array(concat_ws(" ", toks)))
-  }
-
-  /** MinHash signatures: one row per doc with `sig: array<long>[numHashes]`.
     *
-    * Computed as a pure projection — per row, hash the distinct shingles
-    * once, then take `array_min` of each permutation `(a·h+b) mod p` — so
-    * the operator is embarrassingly parallel: NO explode, NO shuffle, no
-    * wide aggregate. (The explode + 64-column groupBy-min alternative
-    * shuffles every (doc, shingle) row and its agg falls out of whole-stage
-    * codegen; measured ~5× slower at sf0.1.)
+    * The token array is bound ONCE per row, as the lambda variable of a
+    * one-element `transform`. Only the tree around a higher-order function
+    * is compiled; its lambda is evaluated per element, so a `split` written
+    * inside the shingle lambda re-splits the whole document for every
+    * shingle — quadratic in document length. Bound once, the split runs once
+    * and each shingle is an O(n) slice of the bound array.
+    */
+  def wordShingles(text: Column, n: Int): Column =
+    element_at(transform(array(split(lower(text), " ")), toks =>
+      when(size(toks) >= n,
+        transform(sequence(lit(0), size(toks) - n),
+          i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
+        .otherwise(array(concat_ws(" ", toks)))), 1)
+
+  /** MinHash signatures: one row per doc with `sig: array<long>[numHashes]`
+    * — the `sig` column of [[setsAndSignatures]], so one code path hashes
+    * shingles.
+    *
+    * A pure projection — per row, hash each distinct shingle once, then
+    * take the min of each permutation `(a·h+b) mod p` — so the operator is
+    * embarrassingly parallel: NO explode, NO shuffle, no wide aggregate.
+    * (The explode + 64-column groupBy-min alternative shuffles every
+    * (doc, shingle) row and its agg falls out of whole-stage codegen;
+    * measured ~5× slower at sf0.1.)
     */
   def signatures(df: DataFrame, id: Column, text: Column,
-                 numHashes: Int, shingleN: Int, seed: Long): DataFrame = {
-    val params = hashParams(numHashes, seed)
-    val hashes = array_distinct(transform(wordShingles(text, shingleN),
-      s => pmod(xxhash64(s), lit(P))))
-    // The k×n min-loop runs as a native codegen'd expression — one
-    // generated Java nest per row. (First attempt was an
-    // `aggregate(zip_with(...))` fold: correct and shuffle-free, but every
-    // element costs an interpreted lambda dispatch — measured ~2s of pure
-    // signature CPU at sf0.1 that the generated loop does in ~50ms.)
-    import org.apache.spark.sql.graftfn.{asColumn, asExpression}
-    df.select(id.as("__id"),
-      asColumn(graft.functions.MinHashSignature(asExpression(hashes),
-        params.map(_._1).toArray, params.map(_._2).toArray, P)).as("sig"))
-  }
+                 numHashes: Int, shingleN: Int, seed: Long): DataFrame =
+    setsAndSignatures(df, id, text, numHashes, shingleN, seed)
+      .select(col("__id"), col("sig"))
 
-  /** One-pass (id, sorted hashed shingle set, minhash signature) projection
-    * — [[signatures]] and the verification-side set build fused so the text
-    * tokenizes once per row (the shingle transform is a codegen common
-    * subexpression). Cache the result when both columns are read by
-    * downstream joins ([[dropNearSeen]]).
+  /** One-pass (id, sorted hashed shingle set, minhash signature) projection:
+    * the text tokenizes once and each shingle hashes once. The signature
+    * min-hashes the set itself (`pmod` of each hash) — a min over the
+    * distinct values equals the min over the values with duplicates, so it
+    * equals the signature of the hashed shingle list. Cache the result when
+    * both columns are read by downstream joins ([[nearDuplicates]],
+    * [[dropNearSeen]]).
     */
   private def setsAndSignatures(df: DataFrame, id: Column, text: Column,
                                 numHashes: Int, shingleN: Int,
                                 seed: Long): DataFrame = {
     import org.apache.spark.sql.graftfn.{asColumn, asExpression}
     val params = hashParams(numHashes, seed)
-    val shingles = wordShingles(text, shingleN)
-    val hashes = array_distinct(transform(shingles, s => pmod(xxhash64(s), lit(P))))
-    df.select(id.as("__id"),
-      sort_array(array_distinct(transform(shingles, s => xxhash64(s)))).as("__set"),
-      asColumn(graft.functions.MinHashSignature(asExpression(hashes),
-        params.map(_._1).toArray, params.map(_._2).toArray, P)).as("sig"))
+    // SORTED sets: one sort_array per row buys the codegen'd merge-scan
+    // intersection (SortedIntersectSize) on every candidate pair
+    val set = sort_array(array_distinct(
+      transform(wordShingles(text, shingleN), s => xxhash64(s))))
+    // The k×n min-loop runs as a native codegen'd expression — one
+    // generated Java nest per row. (First attempt was an
+    // `aggregate(zip_with(...))` fold: correct and shuffle-free, but every
+    // element costs an interpreted lambda dispatch — measured ~2s of pure
+    // signature CPU at sf0.1 that the generated loop does in ~50ms.)
+    // Two projections: `__set` is read twice below, so Catalyst keeps it
+    // computed once rather than inlining the shingle expression twice.
+    df.select(id.as("__id"), set.as("__set"))
+      .select(col("__id"), col("__set"),
+        asColumn(graft.functions.MinHashSignature(
+          asExpression(transform(col("__set"), h => pmod(h, lit(P)))),
+          params.map(_._1).toArray, params.map(_._2).toArray, P)).as("sig"))
   }
 
   /** LSH banding: candidate pairs (id_a < id_b) whose signatures collide in
@@ -210,19 +220,16 @@ object MinHashLSH {
     // minhash-fraction pre-filter would cost two extra joins shipping
     // k-long signatures to prune almost nothing — the exact intersect on
     // the (shorter) shingle sets IS the cheapest verifier.
-    // SORTED sets: one sort_array per row buys the codegen'd merge-scan
-    // intersection (SortedIntersectSize) on every candidate pair below.
-    val sets = CacheScope.cache(df.select(id.as("__id"),
-      sort_array(array_distinct(transform(wordShingles(text, shingleN), s => xxhash64(s))))
-        .as("__set"))
-      ) // cached: joined twice (id_a, id_b) — don't re-tokenize the corpus
-    val sigs = signatures(df, id, text, numHashes, shingleN, seed)
-    val pairs = candidatePairs(sigs, bands, numHashes, maxBucket)
+    //
+    // Cached: the prep is read three times (banding, and the verification
+    // join on id_a and on id_b) — the corpus tokenizes once.
+    val prep = CacheScope.cache(
+      setsAndSignatures(df, id, text, numHashes, shingleN, seed))
 
     import org.apache.spark.sql.graftfn.{asColumn, asExpression}
-    pairs
-      .join(sets.select(col("__id").as("id_a"), col("__set").as("set_a")), Seq("id_a"))
-      .join(sets.select(col("__id").as("id_b"), col("__set").as("set_b")), Seq("id_b"))
+    candidatePairs(prep, bands, numHashes, maxBucket)
+      .join(prep.select(col("__id").as("id_a"), col("__set").as("set_a")), Seq("id_a"))
+      .join(prep.select(col("__id").as("id_b"), col("__set").as("set_b")), Seq("id_b"))
       // |A∪B| = |A|+|B|−|A∩B| — one merge-scan intersect per pair, zero
       // allocation (array_intersect builds a hash set + result array per
       // PAIR — the dominant cost with millions of candidates)
@@ -276,9 +283,8 @@ object MinHashLSH {
                    bands: Int = 6, shingleN: Int = 1, seed: Long = 42L,
                    maxBucket: Int = 5000): DataFrame = {
     import org.apache.spark.sql.graftfn.{asColumn, asExpression}
-    // one tokenize pass per side: shingle set + signature in one projection
-    // (the split/transform is a codegen common subexpression), cached and
-    // read by banding AND verification
+    // one tokenize pass per side: shingle set + signature in one prep,
+    // cached and read by banding AND verification
     val hPrep = CacheScope.cache(
       setsAndSignatures(history, id, text, numHashes, shingleN, seed))
     val bPrep = CacheScope.cache(

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
 import graft.ops._
@@ -250,7 +251,8 @@ object ConsumePipeline {
   /** The consume job's cache scope, as a loan: [[frames]] with the CDC
     * stream and the output cached, handed to `use`, and both caches
     * released when `use` returns or throws — the reference's
-    * cache/unpersist lifecycle (`script/main.py:125,324,370`).
+    * cache/unpersist lifecycle (`script/main.py:125,324,370`). A plan the
+    * caller already cached is read, never cached or released here.
     *
     * The CDC stream is cached because the repair's branches and the fused
     * side aggregation both read it (C1); the output because the caller
@@ -265,10 +267,20 @@ object ConsumePipeline {
     val all = frames(spark, dir, events, params, baseDataDrop, geoDrop)
     // events first: caching `all` plans it, and that plan must read the
     // events cache
-    events.cache()
-    all.cache()
-    try use(all) finally { all.unpersist(); events.unpersist() }
+    val releaseEvents = cacheOwned(events)
+    val releaseAll = cacheOwned(all)
+    try use(all) finally { releaseAll(); releaseEvents() }
   }
+
+  /** Caches `df` unless the session already caches its plan, and returns
+    * the matching release: an unpersist for a cache made here, nothing for
+    * one the caller made. The cache manager matches by plan, so an
+    * unpersist of a plan the caller cached would drop the caller's entry.
+    * (`storageLevel` is the cache manager's lookup of `df`'s plan.)
+    */
+  private def cacheOwned(df: DataFrame): () => Unit =
+    if (df.storageLevel != StorageLevel.NONE) () => ()
+    else { df.cache(); () => df.unpersist() }
 
   /** Full composed pipeline as one lazy DataFrame (no sinks, no caches):
     * [[frames]] projected to [[outputCols]]. It leaves nothing registered

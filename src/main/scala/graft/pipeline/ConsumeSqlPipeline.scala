@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.dedup.CacheScope
 import graft.io.Sources
 
 /** The consume pipeline driven by parameterized SQL TEMPLATES — the
@@ -29,6 +30,12 @@ object ConsumeSqlPipeline {
     Seq("c_name", "c_mktsegment", "last_signup_value", "n_clicks",
       "click_value", "n_views")
 
+  /** The pipeline as one lazy DataFrame over the templates' temp views.
+    * Its caches (the repaired stream, the four side views, the hoisted
+    * base1 and each iteration's base2) go through [[CacheScope.cache]]:
+    * inside `CacheScope.withScope` they are released at scope exit, outside
+    * one they stay for the caller to clear.
+    */
   def build(spark: SparkSession, dir: String,
             params: ConsumeParams = ConsumeParams()): DataFrame = {
     Tables.events(spark, dir).createOrReplaceTempView("graft_cdc")
@@ -48,7 +55,7 @@ object ConsumeSqlPipeline {
     // user_id layout (subset rule), so the window adds no exchange, the
     // hoisted base1 view caches aligned, and the per-iteration base2
     // repartition this mode used to pay is gone.
-    spark.sql(q0).repartition(col("user_id")).cache()
+    CacheScope.cache(spark.sql(q0).repartition(col("user_id")))
       .createOrReplaceTempView("graft_repaired")
 
     // Loop-invariant stage-2 side inputs (templates 2a–2d): the activity id
@@ -69,8 +76,8 @@ object ConsumeSqlPipeline {
       ("graft_side_views", "graft/queries/2d-side_views.sql",
         Map("cdc_view" -> "graft_cdc")))
     sideViews.foreach { case (view, resource, vars) =>
-      spark.sql(Sources.readAndFormatSqlResource(resource, vars))
-        .cache().createOrReplaceTempView(view)
+      CacheScope.cache(spark.sql(Sources.readAndFormatSqlResource(resource, vars)))
+        .createOrReplaceTempView(view)
     }
 
     // Stage 1 hoisted out of the loop, same argument as the DataFrame path
@@ -86,7 +93,7 @@ object ConsumeSqlPipeline {
       "extra_columns_wo_prefix" -> extraCols.mkString(", "),
       "extra_columns_l_prefix" -> extraCols.map("l." + _).mkString(", "),
       "iteration_filter" -> "true"))
-    spark.sql(q1).cache().createOrReplaceTempView("graft_base1_all")
+    CacheScope.cache(spark.sql(q1)).createOrReplaceTempView("graft_base1_all")
 
     params.iterations.map { it =>
       // Column → SQL text, exactly like the reference's
@@ -106,7 +113,7 @@ object ConsumeSqlPipeline {
       // tree would recompute per reference. The user_id alignment arrives
       // free from the repaired view's layout (see above), so no
       // per-iteration repartition; stage 3 stays shuffle-free.
-      spark.sql(q2).cache()
+      CacheScope.cache(spark.sql(q2))
         .createOrReplaceTempView(s"graft_base2_${it.name}")
 
       val q3 = Sources.readAndFormatSqlResource("graft/queries/3-basedata_final.sql", Map(

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
+import graft.dedup.CacheScope
 import graft.pipeline.{ConsumeJob, ConsumeParams, ConsumePipeline, ConsumeSqlPipeline,
   IterationSpec}
 
@@ -22,10 +23,11 @@ class ConsumeSqlSpec extends SparkSpec {
 
   // Both sides read one cached copy of the CDC stream: the per-user
   // `click_value` double sum then adds its terms in the same order on each
-  // side, so the rows agree exactly, not just to within a few ulps.
+  // side, so the rows agree exactly, not just to within a few ulps. The
+  // body runs in a cache scope, which releases the SQL mode's views.
   private def withPinnedEvents[A](body: => A): A = {
     val events = Tables.events(spark, sf).cache()
-    try body finally events.unpersist()
+    try CacheScope.withScope(body) finally events.unpersist()
   }
 
   test("SQL-template pipeline is row-identical to the DataFrame pipeline") {
@@ -69,6 +71,15 @@ class ConsumeSqlSpec extends SparkSpec {
       assert(underA.nonEmpty, "no HOUSEHOLD user survives the pipeline")
       assert(underA == multiset(shared.filter(col("iteration") === "b").drop("iteration")))
     }
+  }
+
+  test("a scoped build plus one action leaves no cache behind") {
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    assert(CacheScope.withScope(ConsumeSqlPipeline.build(spark, sf).count()) > 0)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rddsBefore,
+      "persistent RDDs leaked")
+    assert(spark.sharedState.cacheManager.isEmpty, "cached entries leaked")
   }
 
   test("templates interpolate with str.format semantics (escaped braces kept)") {

@@ -221,4 +221,79 @@ class DedupFuzzySpec extends SparkSpec {
       .select("n_match").as[Long].collect().toSeq
     assert(bins == Seq(expectMatch))
   }
+
+  // --- word shingles: one linear tokenization per document ----------------
+
+  private def refShingles(text: String, n: Int): Seq[String] =
+    if (text == null) Seq("")
+    else {
+      val toks = text.toLowerCase(java.util.Locale.ROOT).split(" ", -1).toSeq
+      if (toks.size >= n) toks.sliding(n).map(_.mkString(" ")).toSeq
+      else Seq(toks.mkString(" "))
+    }
+
+  test("property: wordShingles equals a split/slice/mkString reference") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val word = Gen.oneOf("the", "Fox", "ÉCOLE", "naïve", "ЖУК", "straße",
+      "日本", "A", "x1")
+    val sep = Gen.oneOf(" ", " ", " ", "  ", "   ")
+    val text: Gen[String] = for {
+      k <- Gen.choose(0, 7)
+      ws <- Gen.listOfN(k, word)
+      seps <- Gen.listOfN(k + 1, sep)
+      lead <- Gen.oneOf(true, false)
+      trail <- Gen.oneOf(true, false)
+    } yield (if (lead) seps.head else "") +
+      ws.zip(seps.tail).map { case (w, g) => w + g }.mkString.dropRight(
+        if (trail || ws.isEmpty) 0 else seps.last.length)
+    val random = (0 until 200).flatMap(i =>
+      text.apply(Gen.Parameters.default, Seed(1000L + i)))
+    val fixed = Seq("", " ", "   ", "a", "A  B", " lead", "trail ", "Ünï CODE",
+      "one two", "one two three four")
+    val texts: Seq[Option[String]] = (fixed ++ random).map(Some(_)) :+ None
+    val df = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("i", "text")
+    for (n <- Seq(1, 2, 3, 5)) {
+      val got = df.select(col("i"), MinHashLSH.wordShingles(col("text"), n))
+        .as[(Int, Seq[String])].collect().toMap
+      texts.zipWithIndex.foreach { case (t, i) =>
+        assert(got(i) == refShingles(t.orNull, n), s"n=$n text=${t.map("'" + _ + "'")}")
+      }
+    }
+  }
+
+  test("wordShingles splits each document once, outside every lambda") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction,
+      StringSplit}
+    // one entry per StringSplit: whether it sits under a lambda body
+    def splits(e: Expression, inLambda: Boolean): Seq[Boolean] = e match {
+      case s: StringSplit => inLambda +: s.children.flatMap(splits(_, inLambda))
+      case l: LambdaFunction => l.children.flatMap(splits(_, inLambda = true))
+      case _ => e.children.flatMap(splits(_, inLambda))
+    }
+    for (n <- Seq(1, 3)) {
+      val e = corpus.select(MinHashLSH.wordShingles(col("text"), n))
+        .queryExecution.analyzed.expressions.head
+      assert(splits(e, inLambda = false) == Seq(false), s"n=$n:\n$e")
+    }
+  }
+
+  test("signatures equal the inline hash-every-shingle formula on sf0.001 documents") {
+    import org.apache.spark.sql.graftfn.{asColumn, asExpression}
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val params = MinHashLSH.hashParams(72, 42L)
+    def collectSigs(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Seq[Long])].collect().toMap
+    for (n <- Seq(1, 3)) {
+      val inline = docs.select(col("doc_id"),
+        asColumn(graft.functions.MinHashSignature(
+          asExpression(array_distinct(transform(MinHashLSH.wordShingles(col("text"), n),
+            s => pmod(xxhash64(s), lit(MinHashLSH.P))))),
+          params.map(_._1).toArray, params.map(_._2).toArray, MinHashLSH.P)))
+      val got = collectSigs(MinHashLSH.signatures(docs, col("doc_id"), col("text"),
+        72, n, 42L))
+      assert(got.nonEmpty)
+      assert(got == collectSigs(inline), s"n=$n")
+    }
+  }
 }

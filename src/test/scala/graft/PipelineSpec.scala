@@ -73,6 +73,19 @@ class PipelineSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty, "cached entries leaked")
   }
 
+  test("ConsumeJob.run keeps a cache the caller made of its events") {
+    spark.catalog.clearCache()
+    val events = Tables.events(spark, sf).cache()
+    try {
+      events.count()
+      val level = events.storageLevel
+      assert(level.useMemory)
+      ConsumeJob.run(spark, sf, Files.createTempDirectory("graft-caller-cache").toString)
+      assert(events.storageLevel == level, "the job released the caller's events cache")
+    } finally events.unpersist()
+    assert(spark.sharedState.cacheManager.isEmpty, "cached entries leaked")
+  }
+
   test("an export that throws releases every block the composition cached") {
     spark.catalog.clearCache()
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet

@@ -188,6 +188,40 @@ class PlanAuditSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
+  test("near-dup path: the one cached prep relation holds the only split of the text") {
+    import org.apache.spark.sql.catalyst.expressions.StringSplit
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    object aqe extends AdaptiveSparkPlanHelper
+    // StringSplits in a plan's own nodes; a cached relation's plan is not a
+    // child of its scan, so those are counted per relation below
+    def splits(p: SparkPlan): Int =
+      aqe.flatMap(p)(_.expressions).map(_.collect { case s: StringSplit => s }.size).sum
+    def scanned(p: SparkPlan): Seq[InMemoryRelation] =
+      aqe.collect(p) { case s: InMemoryTableScanExec => s.relation }
+    dedup.CacheScope.withScope {
+      val docs = Tables.documents(spark, sf)
+      val df = dedup.MinHashLSH.nearDuplicates(docs, col("doc_id"), col("text"),
+        threshold = 0.95)
+      val top = df.queryExecution.executedPlan
+      // every cached relation the plan reaches, nested ones included, once
+      // each (one cache scanned twice is two relations with one builder)
+      def reach(todo: List[InMemoryRelation],
+                seen: List[InMemoryRelation]): List[InMemoryRelation] = todo match {
+        case Nil => seen
+        case r :: rest if seen.exists(_.cacheBuilder eq r.cacheBuilder) => reach(rest, seen)
+        case r :: rest => reach(rest ++ scanned(r.cacheBuilder.cachedPlan), r :: seen)
+      }
+      val relations = reach(scanned(top).toList, Nil)
+      assert(splits(top) == 0, s"the text is split outside the caches:\n$top")
+      val perCache = relations.map(r => splits(r.cacheBuilder.cachedPlan)).filter(_ > 0)
+      assert(perCache == Seq(1),
+        s"expected one cached relation holding one split, got $perCache:\n" +
+          relations.map(_.cacheBuilder.cachedPlan).mkString("\n---\n"))
+    }
+  }
+
   test("oversized-bucket guard plans a broadcast anti join (banded rows never reshuffle)") {
     val docs = Tables.documents(spark, sf)
     val sigs = dedup.MinHashLSH.signatures(docs, col("doc_id"), col("text"), 72, 1, 42L)
