@@ -1,11 +1,13 @@
 package graft.dedup
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Scoped tracking for the DataFrames this library persists ON BEHALF OF a
   * caller (the shingle-set / signature prep frames in [[MinHashLSH]], the
   * edge frame in [[Clusters.connectedComponents]], the views of
-  * [[graft.pipeline.ConsumeSqlPipeline]]): their lifecycle is
+  * [[graft.pipeline.ConsumeSqlPipeline]], the CDC stream and output of
+  * [[graft.pipeline.ConsumePipeline.compose]]): their lifecycle is
   * caller-owned because the results are lazy — the caches must outlive the
   * result's materialization — so a LOOPING caller (the streaming near-dup
   * ingest gate runs one gate invocation per trigger, forever) has to
@@ -24,6 +26,9 @@ import org.apache.spark.sql.DataFrame
   * }                               // ONLY those frames unpersisted here
   * }}}
   *
+  * A plan the caller had already cached stays the caller's: [[cache]]
+  * reads it as it is and registers nothing, so no scope releases it.
+  *
   * Registration piggybacks on plan CONSTRUCTION (the `.cache()` calls run
   * synchronously inside the library functions, never at materialization
   * time), so a ThreadLocal scope is exact for any single-threaded caller —
@@ -37,13 +42,18 @@ object CacheScope {
     new ThreadLocal[scala.collection.mutable.Buffer[() => Unit]]()
 
   /** `df.cache()`, with its unpersist registered on the innermost active
-    * scope (plain cache when none is active).
+    * scope (plain cache when none is active). A plan the session already
+    * caches is returned as it is and registers nothing: the cache manager
+    * matches by plan, so an unpersist here would drop the caller's entry.
+    * (`storageLevel` is the cache manager's lookup of `df`'s plan.)
     */
-  private[graft] def cache(df: DataFrame): DataFrame = {
-    val c = df.cache()
-    onExit(c.unpersist(blocking = false))
-    c
-  }
+  private[graft] def cache(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else {
+      val c = df.cache()
+      onExit(c.unpersist(blocking = false))
+      c
+    }
 
   /** Register arbitrary cleanup with the innermost active scope — used by
     * [[Clusters]] to free the RETURNED localCheckpoint frames' RDD blocks
@@ -55,9 +65,11 @@ object CacheScope {
 
   /** Run `body` (which must MATERIALIZE everything it needs — results are
     * lazy and the caches die at scope exit), then unpersist every frame
-    * the library cached inside it. `Dataset.unpersist` also drops the
-    * cache-manager entry, so a long-running loop does not accrete plan
-    * metadata either. Other session caches are untouched.
+    * the library cached inside it, last cached first: a cache goes before
+    * the caches its plan reads, so no release re-plans a cache still
+    * registered. `Dataset.unpersist` also drops the cache-manager entry,
+    * so a long-running loop does not accrete plan metadata either. Other
+    * session caches, and plans the caller cached, are untouched.
     */
   def withScope[T](body: => T): T = {
     val outer = active.get()
@@ -66,7 +78,7 @@ object CacheScope {
     try body
     finally {
       active.set(outer)
-      buf.foreach { cleanup =>
+      buf.reverseIterator.foreach { cleanup =>
         try cleanup()
         catch { case _: Throwable => () }
       }

@@ -137,12 +137,16 @@ object Clusters {
     // would SILENTLY split that component (a containment-duplicate chain
     // of 10k docs is constructible). Min-label is O(diameter); for
     // long-chain graphs use [[connectedComponentsAlternating]] (O(log n)
-    // rounds) instead of raising maxIter.
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds — a " +
-        "component's diameter exceeds the iteration budget; use " +
-        "connectedComponentsAlternating (O(log n) rounds) for " +
-        "long-chain graphs")
+    // rounds) instead of raising maxIter. The last round's checkpoint is
+    // freed first: no caller can reach it once this throws.
+    if (!converged) {
+      dropCheckpointBlocks(labels)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter rounds — a " +
+          "component's diameter exceeds the iteration budget; use " +
+          "connectedComponentsAlternating (O(log n) rounds) for " +
+          "long-chain graphs")
+    }
     // the RETURNED frame's checkpoint blocks outlive this call by design
     // (the result is lazy); a LOOPING caller frees them at scope end —
     // without this, a streaming gate pins one labels checkpoint per
@@ -272,8 +276,12 @@ object Clusters {
     }
     }
     superseded.foreach(dropCheckpointBlocks)
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsAlternating did not converge in $maxIter rounds")
+    if (!converged) {
+      dropCheckpointBlocks(edges)
+      dropCheckpointBlocks(raw)
+      throw new IllegalStateException(
+        s"connectedComponentsAlternating did not converge in $maxIter rounds")
+    }
     // star forest: non-roots appear exactly once as u; roots only as v
     val labels = edges.select(col("u").as("id"), col("v").as("component"))
       .unionAll(edges.select(col("v").as("id"), col("v").as("component"))
@@ -331,18 +339,13 @@ object Clusters {
     * set is typically a small fraction so both joins broadcast under
     * AQE at real scale.
     *
-    * @param alternating same escape hatch as [[dropNearDuplicates]]: route
-    *        the components stage to [[connectedComponentsAlternating]]
-    *        (O(log n) rounds) when the pair graph can chain beyond
-    *        min-label's diameter budget — e.g. a containment-duplicate
-    *        chain, exactly the shape min-label's non-convergence error
-    *        cites. Default stays min-label: the MinHash-verified text
-    *        graphs keepBest serves converge in 2-3 doubled rounds.
+    * Components come from min-label [[connectedComponents]], which throws
+    * when a pair graph chains beyond its round budget; the MinHash-verified
+    * text graphs keepBest serves converge in 2-3 doubled rounds.
     */
   def keepBest(df: DataFrame, id: Column, score: Column,
-               pairs: DataFrame, alternating: Boolean = false): DataFrame = {
-    val labels = if (alternating) connectedComponentsAlternating(pairs)
-                 else connectedComponents(pairs)
+               pairs: DataFrame): DataFrame = {
+    val labels = connectedComponents(pairs)
     val winners = df.select(id.as("__id"), score.as("__s"))
       .join(labels, col("__id") === col("id"))
       .groupBy(col("component"))

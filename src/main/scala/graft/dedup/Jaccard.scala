@@ -96,19 +96,34 @@ object Jaccard {
           col("n_id_a") >= col("n_id_b") * threshold - lit(1e-9))
       .select("id_a", "id_b").distinct()
 
-    import org.apache.spark.sql.graftfn.{asColumn, asExpression}
     candidates
       .join(pa, Seq("id_a"))
       .join(pb, Seq("id_b"))
-      // merge-scan intersect (sets are hash-sorted by hashedSets): no per-pair
-      // hash set / result array allocation on the verification hot path
+      .transform(verified(_, threshold))
+      .select("id_a", "id_b", "jaccard")
+  }
+
+  /** The exact-Jaccard acceptance rule of every near-dup path
+    * ([[similarPairs]], [[MinHashLSH.nearDuplicates]],
+    * [[MinHashLSH.dropNearSeen]]): `pairs` carries long-hashed sorted sets
+    * `set_a`/`set_b`; adds `shared` = |A∩B| and `jaccard` = |A∩B| / |A∪B|
+    * rounded to 6 digits, and keeps the rows with `jaccard >= threshold`.
+    *
+    * |A∪B| = |A|+|B|−|A∩B|: one merge-scan intersect per pair, zero
+    * allocation (array_intersect builds a hash set + result array per PAIR
+    * — the dominant cost with millions of candidates). The ratio is
+    * rounded BEFORE the comparison, exactly like the DuckDB oracles, so a
+    * pair at threshold−ε falls the same way in both engines.
+    */
+  private[graft] def verified(pairs: DataFrame, threshold: Double): DataFrame = {
+    import org.apache.spark.sql.graftfn.{asColumn, asExpression}
+    pairs
       .withColumn("shared", asColumn(graft.functions.SortedIntersectSize(
         asExpression(col("set_a")), asExpression(col("set_b")))))
       .withColumn("jaccard",
         round(col("shared").cast("double") /
           (size(col("set_a")) + size(col("set_b")) - col("shared")), 6))
       .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
   }
 
   /** ASYMMETRIC containment pairs: `C(A,B) = |A∩B| / |A| ≥ threshold` —

@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   *  - All hashing is `xxhash64` + modular arithmetic on longs — codegen'd
   *    built-ins, no UDFs, so the signature stage is CPU-cheap and columnar.
   *  - Skew: a degenerate bucket (boilerplate shingle) can blow up the
-  *    self-join; cap bucket size upstream if corpora have giant clusters.
+  *    self-join; buckets above `maxBucket` rows are dropped
+  *    (`withoutOversized`).
   */
 object MinHashLSH {
 
@@ -93,13 +94,6 @@ object MinHashLSH {
           params.map(_._1).toArray, params.map(_._2).toArray, P)).as("sig"))
   }
 
-  /** LSH banding: candidate pairs (id_a < id_b) whose signatures collide in
-    * at least one of `bands` bands. The arity probe runs a job — prefer the
-    * explicit-`numHashes` overload inside composed plans.
-    */
-  def candidatePairs(sigs: DataFrame, bands: Int): DataFrame =
-    candidatePairs(sigs, bands, sigs.select(size(col("sig"))).first().getInt(0))
-
   /** (__id, band, bh) band-bucket keys for a signature frame — the shared
     * front half of the self-join ([[candidatePairs]]) and the cross-frame
     * incremental join ([[dropNearSeen]]).
@@ -115,25 +109,35 @@ object MinHashLSH {
       .select(col("__id"), col("b.band").as("band"), col("b.bh").as("bh"))
   }
 
-  def candidatePairs(sigs: DataFrame, bands: Int, numHashes: Int,
-                     maxBucket: Int = 5000): DataFrame = {
-    // Cached: the bucket self-join reads `banded` on BOTH sides — without
-    // this the whole signature computation runs twice. Lifecycle is
-    // caller-owned (the result is lazy): clear between repeated invocations
-    // — see dropNearSeen's scaladoc.
-    val banded = CacheScope.cache(bandKeys(sigs, bands, numHashes))
-    // Degenerate-bucket guard: a bucket of m docs contributes m(m−1)/2 pairs
-    // to the self-join — ONE boilerplate shingle cluster goes quadratic at
-    // corpus scale. Buckets above maxBucket are dropped (standard web-dedup
-    // practice): their members still meet in any of the other bands-1 bands
-    // unless the collision is itself degenerate. The oversized list is tiny
-    // (aggregated), so it broadcasts into an anti join — the banded rows
-    // never reshuffle for the filter.
-    val oversized = banded.groupBy(col("band"), col("bh"))
+  /** Degenerate-bucket guard: `keys` without the (band, bh) buckets that
+    * hold more than `maxBucket` rows of `census`. A bucket of m docs
+    * contributes m(m−1)/2 pairs to a self-join — ONE boilerplate shingle
+    * cluster goes quadratic at corpus scale. Dropped buckets follow
+    * standard web-dedup practice: their members still meet in any of the
+    * other bands-1 bands unless the collision is itself degenerate. The
+    * oversized list is tiny (aggregated), so it broadcasts into an anti
+    * join — the `keys` rows never reshuffle for the filter.
+    */
+  private def withoutOversized(keys: DataFrame, census: DataFrame,
+                               maxBucket: Int): DataFrame = {
+    val oversized = census.groupBy(col("band"), col("bh"))
       .agg(count(lit(1)).as("__n"))
       .filter(col("__n") > maxBucket)
       .select(col("band"), col("bh"))
-    val kept = banded.join(broadcast(oversized), Seq("band", "bh"), "left_anti")
+    keys.join(broadcast(oversized), Seq("band", "bh"), "left_anti")
+  }
+
+  /** LSH banding: candidate pairs (id_a < id_b) whose signatures collide in
+    * at least one of `bands` bands, oversized buckets dropped.
+    */
+  def candidatePairs(sigs: DataFrame, bands: Int, numHashes: Int,
+                     maxBucket: Int = 5000): DataFrame = {
+    // Cached: the bucket self-join reads `banded` on BOTH sides — without
+    // this the whole signature computation runs twice. The result is lazy,
+    // so the cache must outlive it: a looping caller releases it with
+    // CacheScope.withScope.
+    val banded = CacheScope.cache(bandKeys(sigs, bands, numHashes))
+    val kept = withoutOversized(banded, banded, maxBucket)
     kept.alias("x").join(kept.alias("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.__id") < col("y.__id"))
@@ -226,19 +230,10 @@ object MinHashLSH {
     val prep = CacheScope.cache(
       setsAndSignatures(df, id, text, numHashes, shingleN, seed))
 
-    import org.apache.spark.sql.graftfn.{asColumn, asExpression}
     candidatePairs(prep, bands, numHashes, maxBucket)
       .join(prep.select(col("__id").as("id_a"), col("__set").as("set_a")), Seq("id_a"))
       .join(prep.select(col("__id").as("id_b"), col("__set").as("set_b")), Seq("id_b"))
-      // |A∪B| = |A|+|B|−|A∩B| — one merge-scan intersect per pair, zero
-      // allocation (array_intersect builds a hash set + result array per
-      // PAIR — the dominant cost with millions of candidates)
-      .withColumn("__shared", asColumn(graft.functions.SortedIntersectSize(
-        asExpression(col("set_a")), asExpression(col("set_b")))))
-      .withColumn("jaccard",
-        round(col("__shared").cast("double") /
-          (size(col("set_a")) + size(col("set_b")) - col("__shared")), 6))
-      .filter(col("jaccard") >= threshold)
+      .transform(Jaccard.verified(_, threshold))
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
@@ -261,12 +256,10 @@ object MinHashLSH {
     *
     * Each side tokenizes ONCE: a combined (id, shingle set, signature)
     * frame is cached per side and feeds band keys (census + candidate
-    * join) AND the verification join. Cache lifecycle is CALLER-owned —
-    * the result is lazy, so the caches must outlive its materialization;
-    * a caller looping ingest gates should `spark.catalog.clearCache()`
-    * (or unpersist via `sparkContext.getPersistentRDDs`) between
-    * invocations, or band keys accrete in executor storage. (Same
-    * lifecycle as [[candidatePairs]]'s banded cache.)
+    * join) AND the verification join. The result is lazy, so the caches
+    * must outlive its materialization; a caller looping ingest gates
+    * wraps each invocation in [[CacheScope.withScope]], which releases
+    * exactly these caches, or the prep frames accrete in executor storage.
     *
     * Oracle note (d12): the driver gate replays an EXACT Jaccard anti
     * join, while this path is probabilistic — b=6/r=12 detection ≈ 0.996
@@ -282,7 +275,6 @@ object MinHashLSH {
                    text: Column, threshold: Double, numHashes: Int = 72,
                    bands: Int = 6, shingleN: Int = 1, seed: Long = 42L,
                    maxBucket: Int = 5000): DataFrame = {
-    import org.apache.spark.sql.graftfn.{asColumn, asExpression}
     // one tokenize pass per side: shingle set + signature in one prep,
     // cached and read by banding AND verification
     val hPrep = CacheScope.cache(
@@ -293,10 +285,7 @@ object MinHashLSH {
       .select(col("__id").as("batch_id"), col("band"), col("bh"))
     val hBand = bandKeys(hPrep, bands, numHashes)
       .select(col("__id").as("hist_id"), col("band"), col("bh"))
-    val oversized = hBand.groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > maxBucket)
-      .select(col("band"), col("bh"))
-    val cand = bBand.join(broadcast(oversized), Seq("band", "bh"), "left_anti")
+    val cand = withoutOversized(bBand, hBand, maxBucket)
       .join(hBand, Seq("band", "bh"))
       .select(col("batch_id"), col("hist_id")).distinct()
     val confirmed = cand
@@ -304,12 +293,7 @@ object MinHashLSH {
         Seq("batch_id"))
       .join(hPrep.select(col("__id").as("hist_id"), col("__set").as("set_b")),
         Seq("hist_id"))
-      .withColumn("__shared", asColumn(graft.functions.SortedIntersectSize(
-        asExpression(col("set_a")), asExpression(col("set_b")))))
-      // rounded before comparing, exactly like the oracle — a pair at
-      // threshold−ε must fall the same way in both engines
-      .filter(round(col("__shared").cast("double") /
-        (size(col("set_a")) + size(col("set_b")) - col("__shared")), 6) >= threshold)
+      .transform(Jaccard.verified(_, threshold))
       .select(col("batch_id")).distinct()
     val idName = batch.select(id).columns.head
     batch.join(confirmed, col(idName) === col("batch_id"), "left_anti")

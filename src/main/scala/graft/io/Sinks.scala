@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Output sinks (SURVEY §2.1 K1–K3; reference `script/main.py:377-416`).
@@ -695,46 +695,4 @@ object Sinks {
       .sortBy(key)
       .format("parquet")
       .saveAsTable(table)
-
-  /** Small-files compaction plan — the lakehouse maintenance step: group
-    * a directory's parquet files into target-sized rewrite bins
-    * (first-fit in name order, deterministic; a file already over the
-    * target gets its own bin — it never blocks others). One row per
-    * bin: file count, total bytes, and the file list, ready to drive
-    * `spark.read.parquet(files).coalesce(1).write` rewrites bin by bin.
-    *
-    * This is a METADATA operator: the file listing is driver-side by
-    * nature (it is what any table-format compactor reads from the
-    * manifest), bounded by file count, and touches zero data bytes —
-    * the no-driver-data-paths invariant concerns row data, not
-    * planning metadata.
-    */
-  def compactionPlan(spark: SparkSession, dir: String,
-                     targetBytes: Long): DataFrame = {
-    require(targetBytes >= 1, "targetBytes must be >= 1")
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(p)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => (s.getPath.getName, s.getLen)).sortBy(_._1)
-    case class Acc(bin: Long, fill: Long,
-                   out: Vector[(Long, String, Long)])
-    val packed = files.foldLeft(Acc(0L, 0L, Vector.empty)) {
-      case (a, (name, len)) =>
-        if (a.fill > 0 && a.fill + len > targetBytes)
-          Acc(a.bin + 1, len, a.out :+ ((a.bin + 1, name, len)))
-        else Acc(a.bin, a.fill + len, a.out :+ ((a.bin, name, len)))
-    }.out
-    import spark.implicits._
-    packed.toDF("bin_id", "file", "bytes")
-      .groupBy("bin_id")
-      .agg(count(lit(1)).as("n_files"), sum("bytes").as("total_bytes"),
-        sort_array(collect_list("file")).as("files"))
-  }
-
-  /** ORC export — for consumers standardized on the ORC toolchain; same
-    * writer semantics as the parquet paths (snappy via Spark defaults).
-    */
-  def orc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
 }

@@ -57,23 +57,6 @@ object Sources {
   def csvLookup(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").option("inferSchema", "true").csv(path)
 
-  /** JSON-lines scan (plain or gzip — Spark decompresses by extension),
-    * reading back what [[Sinks.gzipJson]] writes. Supply the schema in
-    * production: inference costs a full extra pass over the data and infers
-    * from whatever subset of fields happens to be present.
-    */
-  def jsonLines(spark: SparkSession, path: String,
-                schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val r = spark.read
-    schema.fold(r)(r.schema).json(path)
-  }
-
-  /** ORC scan — same columnar pushdown/pruning properties as parquet
-    * (PlanAudit-equivalent: filters and column pruning reach the scan).
-    */
-  def orc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
   /** S6 (`script/helper.py:64-72`): SQL template load + `{placeholder}`
     * substitution (Python `str.format` semantics: every `{key}` replaced,
     * unknown keys are an error, `{{`/`}}` escape literal braces).
@@ -100,12 +83,7 @@ object Sources {
     out.toString
   }
 
-  /** S6: file variant — read a `.sql` template from disk then interpolate. */
-  def readAndFormatSql(path: String, params: Map[String, String]): String =
-    formatSql(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8), params)
-
-  /** S6: classpath variant — templates shipped inside the library jar
+  /** S6, as shipped: templates inside the library jar
     * (the `src/main/resources/graft/queries` directory), so the SQL
     * pipeline runs identically from sbt, spark-submit, or a test.
     */

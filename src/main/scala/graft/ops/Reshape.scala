@@ -161,14 +161,4 @@ object Reshape {
   def subTypeMap(typeCol: Column, valueCol: Column): Column =
     when(valueCol.isNotNull, map(lower(typeCol), valueCol))
       .otherwise(map(lower(typeCol), lit("NOT_APPLICABLE")))
-
-  /** P9 (`script/helper.py:165-172`): audit/changelog metadata columns. */
-  def withChangeLog(df: DataFrame, system: String, version: String,
-                    operation: String, note: String): DataFrame =
-    df.withColumns(Map(
-      "metaData_changeLog_timestamp" -> current_timestamp(),
-      "metaData_changeLog_system"    -> lit(system),
-      "metaData_changeLog_version"   -> lit(version),
-      "metaData_changeLog_operation" -> lit(operation),
-      "metaData_changeLog_note"      -> lit(note)))
 }

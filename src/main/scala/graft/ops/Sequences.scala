@@ -62,7 +62,7 @@ object Sequences {
     // since removed: 3.17 s naive vs 3.59 s salt=8 — replication + the
     // explode breaking WSCG fusion),
     // which is why it is the hatch, not the default — same contract as
-    // Clusters.keepBest(alternating).
+    // Clusters.dropNearDuplicates(alternating).
     val directed = if (salt == 1) {
       val a = items.select(col("cust"), col("item").as("ante"),
         col("__first").as("__af"))

@@ -3,9 +3,9 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
+import graft.dedup.CacheScope
 import graft.ops._
 
 /** One pipeline iteration = the reference's (country × distribution) loop
@@ -265,22 +265,13 @@ object ConsumePipeline {
                 (use: DataFrame => A): A = {
     val events = Tables.events(spark, dir)
     val all = frames(spark, dir, events, params, baseDataDrop, geoDrop)
-    // events first: caching `all` plans it, and that plan must read the
-    // events cache
-    val releaseEvents = cacheOwned(events)
-    val releaseAll = cacheOwned(all)
-    try use(all) finally { releaseAll(); releaseEvents() }
+    CacheScope.withScope {
+      // events first: caching `all` plans it, and that plan must read the
+      // events cache
+      CacheScope.cache(events)
+      use(CacheScope.cache(all))
+    }
   }
-
-  /** Caches `df` unless the session already caches its plan, and returns
-    * the matching release: an unpersist for a cache made here, nothing for
-    * one the caller made. The cache manager matches by plan, so an
-    * unpersist of a plan the caller cached would drop the caller's entry.
-    * (`storageLevel` is the cache manager's lookup of `df`'s plan.)
-    */
-  private def cacheOwned(df: DataFrame): () => Unit =
-    if (df.storageLevel != StorageLevel.NONE) () => ()
-    else { df.cache(); () => df.unpersist() }
 
   /** Full composed pipeline as one lazy DataFrame (no sinks, no caches):
     * [[frames]] projected to [[outputCols]]. It leaves nothing registered

@@ -60,6 +60,17 @@ class ClustersSpec extends SparkSpec {
     assert(alt == ml)
   }
 
+  test("a run that does not converge frees its checkpoints before it throws") {
+    val chain = (0L until 999L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    intercept[IllegalStateException](Clusters.connectedComponents(chain, maxIter = 2))
+    assert(persisted == before, "min-label left checkpoints persisted")
+    intercept[IllegalStateException](
+      Clusters.connectedComponentsAlternating(chain, maxIter = 1))
+    assert(persisted == before, "alternating left checkpoints persisted")
+  }
+
   test("self-loop-only ids label themselves in BOTH algorithms (contract parity)") {
     val pairs = Seq((5L, 5L), (1L, 2L), (7L, 7L)).toDF("id_a", "id_b")
     val ml = Clusters.connectedComponents(pairs).collect()

@@ -43,6 +43,46 @@ class DedupFuzzySpec extends SparkSpec {
     assert(kept == Set(5L, 7L, 8L), s"got $kept")
   }
 
+  test("property: dropNearSeen keeps exactly the batch docs nearDuplicates links to no history doc") {
+    // one acceptance rule and, with the bucket cap off, one candidate rule:
+    // a batch doc drops iff nearDuplicates over batch ∪ history pairs it
+    // with a history doc. Planted: batch→history near-dups, batch-internal
+    // and history-internal near-dups, and unrelated docs.
+    val vocab = (0 until 300).map(i => s"w$i")
+    for (seed <- Seq(7L, 20261019L)) {
+      val rnd = new scala.util.Random(seed)
+      def fresh(): Seq[String] = Seq.fill(24)(vocab(rnd.nextInt(vocab.size)))
+      def nearCopy(words: Seq[String]): Seq[String] =
+        words.updated(rnd.nextInt(words.size), vocab(rnd.nextInt(vocab.size)))
+      val hist = Seq.fill(40)(fresh())
+      val histDocs = hist ++ Seq.fill(5)(nearCopy(hist(rnd.nextInt(hist.size))))
+      val batchBase = Seq.fill(30)(fresh())
+      val batchDocs = batchBase ++
+        Seq.fill(12)(nearCopy(hist(rnd.nextInt(hist.size)))) ++
+        Seq.fill(6)(nearCopy(batchBase(rnd.nextInt(batchBase.size))))
+      val history = histDocs.zipWithIndex
+        .map { case (w, i) => (i.toLong, w.mkString(" ")) }.toDF("doc_id", "text")
+      val batch = batchDocs.zipWithIndex
+        .map { case (w, i) => (1000L + i, w.mkString(" ")) }.toDF("doc_id", "text")
+      graft.dedup.CacheScope.withScope {
+        val kept = MinHashLSH.dropNearSeen(batch, history, col("doc_id"), col("text"),
+            threshold = 0.8, numHashes = 64, bands = 16, maxBucket = Int.MaxValue)
+          .select("doc_id").as[Long].collect().toSet
+        val pairs = MinHashLSH.nearDuplicates(batch.unionByName(history),
+            col("doc_id"), col("text"), threshold = 0.8, numHashes = 64,
+            bands = 16, maxBucket = Int.MaxValue)
+          .select("id_a", "id_b").as[(Long, Long)].collect()
+        def isHist(id: Long) = id < 1000L
+        val linked = pairs.collect {
+          case (a, b) if isHist(a) != isHist(b) => if (isHist(a)) b else a
+        }.toSet
+        val batchIds = (1000L until 1000L + batchDocs.size).toSet
+        assert(linked.nonEmpty && linked.size < batchIds.size, s"seed $seed: $linked")
+        assert(kept == batchIds -- linked, s"seed $seed")
+      }
+    }
+  }
+
   test("MinHash signature is similarity-preserving: identical docs share all minhashes") {
     val sigs = MinHashLSH.signatures(corpus, col("doc_id"), col("text"),
         numHashes = 32, shingleN = 1, seed = 42L)

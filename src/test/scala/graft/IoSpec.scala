@@ -98,7 +98,7 @@ class IoSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString + "/out"
     val df = Seq((1L, "a", 1.5), (2L, "b", -0.25)).toDF("id", "name", "score")
     Sinks.gzipJson(df, dir)
-    val back = Sources.jsonLines(spark, dir, Some(df.schema))
+    val back = spark.read.schema(df.schema).json(dir)
       .orderBy("id").collect().toSeq
     assert(back == df.orderBy("id").collect().toSeq)
   }
@@ -321,49 +321,6 @@ class IoSpec extends SparkSpec {
     assert(spark.table(table).orderBy("id").select("id")
       .as[Long].collect().toSeq == Seq(1L, 3L, 22L))
     spark.sql(s"DROP TABLE IF EXISTS $table")
-  }
-
-  test("ORC sink/source round-trip preserves rows and types") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString + "/out"
-    val df = Seq((1L, "a", java.sql.Date.valueOf("2024-01-02"), true),
-        (2L, "b", java.sql.Date.valueOf("2024-02-03"), false))
-      .toDF("id", "name", "d", "flag")
-    Sinks.orc(df, dir)
-    val back = Sources.orc(spark, dir)
-    // file sources read everything back nullable — compare names + types
-    assert(back.schema.map(f => (f.name, f.dataType)) ==
-      df.schema.map(f => (f.name, f.dataType)))
-    assert(back.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
-  }
-
-  test("compactionPlan: bins bounded, every file exactly once, oversized isolated") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    // several small files (one row each) + the plan over them
-    (1 to 6).foreach { i =>
-      Seq((i.toLong, "x" * 100)).toDF("id", "pad")
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sizes = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => s.getPath.getName -> s.getLen).toMap
-    assert(sizes.size == 6)
-    val per = sizes.values.head
-    val plan = Sinks.compactionPlan(spark, dir, targetBytes = per * 2)
-      .as[(Long, Long, Long, Seq[String])].collect().toSeq
-    // every file appears exactly once across bins
-    assert(plan.flatMap(_._4).sorted == sizes.keys.toSeq.sorted)
-    // no bin exceeds the target unless it is a single oversized file
-    plan.foreach { case (_, n, bytes, _) =>
-      assert(bytes <= per * 2 || n == 1, s"overfull bin: $n files, $bytes B")
-    }
-    // a target below any single file isolates every file
-    val singles = Sinks.compactionPlan(spark, dir, targetBytes = 1L)
-      .as[(Long, Long, Long, Seq[String])].collect().toSeq
-    assert(singles.size == 6 && singles.forall(_._2 == 1L))
   }
 
   test("replaceWhere: single-writer lock — a concurrent writer fails fast, " +

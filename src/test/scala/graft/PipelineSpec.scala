@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
+import graft.dedup.CacheScope
 import graft.pipeline.{ConsumeJob, ConsumeParams, ConsumePipeline, IterationSpec}
 import java.nio.file.Files
 
@@ -83,6 +84,25 @@ class PipelineSpec extends SparkSpec {
       ConsumeJob.run(spark, sf, Files.createTempDirectory("graft-caller-cache").toString)
       assert(events.storageLevel == level, "the job released the caller's events cache")
     } finally events.unpersist()
+    assert(spark.sharedState.cacheManager.isEmpty, "cached entries leaked")
+  }
+
+  test("CacheScope.cache releases what it cached and keeps a plan the caller cached") {
+    spark.catalog.clearCache()
+    val callers = spark.range(11).toDF("id").cache()
+    try {
+      callers.count()
+      val level = callers.storageLevel
+      val own = spark.range(13).toDF("id")
+      CacheScope.withScope {
+        // the same plans, built anew: the cache manager matches by plan
+        assert(CacheScope.cache(spark.range(11).toDF("id")).count() == 11)
+        assert(CacheScope.cache(spark.range(13).toDF("id")).count() == 13)
+        assert(own.storageLevel.useMemory)
+      }
+      assert(callers.storageLevel == level, "the scope released the caller's cache")
+      assert(!own.storageLevel.useMemory, "the scope kept a cache it made")
+    } finally callers.unpersist()
     assert(spark.sharedState.cacheManager.isEmpty, "cached entries leaked")
   }
 
