@@ -114,12 +114,18 @@ object Jaccard {
     * — the dominant cost with millions of candidates). The ratio is
     * rounded BEFORE the comparison, exactly like the DuckDB oracles, so a
     * pair at threshold−ε falls the same way in both engines.
+    *
+    * The intersect runs once per pair. As a plain column, Catalyst would
+    * push the filter into the pair join's condition with `shared` inlined
+    * (twice: numerator and union) and compute it a third time above the
+    * join. A generator's output is not inlined, so `shared` comes out of
+    * a one-element `explode` and the filter reads it.
     */
   private[graft] def verified(pairs: DataFrame, threshold: Double): DataFrame = {
     import org.apache.spark.sql.graftfn.{asColumn, asExpression}
     pairs
-      .withColumn("shared", asColumn(graft.functions.SortedIntersectSize(
-        asExpression(col("set_a")), asExpression(col("set_b")))))
+      .withColumn("shared", explode(array(asColumn(graft.functions.SortedIntersectSize(
+        asExpression(col("set_a")), asExpression(col("set_b")))))))
       .withColumn("jaccard",
         round(col("shared").cast("double") /
           (size(col("set_a")) + size(col("set_b")) - col("shared")), 6))

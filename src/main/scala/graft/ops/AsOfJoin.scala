@@ -19,6 +19,10 @@ import org.apache.spark.sql.functions._
   *
   * Requirements: non-key column names must be disjoint between the sides
   * (same condition a plain join needs for unambiguous output).
+  *
+  * The CDC repair ([[AsOfJoin.resurrectDeletes]]) is the same carry with
+  * both sides already in one stream: tombstones and versions are rows of
+  * one table, so it is a single window over that table.
   */
 object AsOfJoin {
 
@@ -123,18 +127,27 @@ object AsOfJoin {
   /** CDC delete-resurrection (reference `0-merge_delete_query.sql`, whole
     * file): tombstones carry no payload; resurrect each Delete by attaching
     * the payload of the most recent earlier non-deleted version of the same
-    * entity, then union with the surviving non-deleted records.
+    * entity, and keep every non-deleted record as it is.
     *
     * Output columns: entityKey, opCol, tsCol, payloadCols — tombstone rows
     * keep their own key/op/ts and borrow payload; non-deleted rows pass
     * through unchanged (reference `0-merge_delete_query.sql:50-58` UNION ALL).
+    * Rows with a null `opCol` are neither and drop. A tombstone with no
+    * earlier version drops (the reference's inner join).
+    *
+    * One window pass: each entity's rows sort by (ts, is-delete, tiebreak),
+    * so at equal ts versions come before tombstones (the reference's
+    * inclusive `v.ts <= d.ts`) and the highest tiebreak is the last version.
+    * A running `last(payload, ignoreNulls)` over the versions carries the
+    * latest one into each tombstone. One shuffle and one sort per key, no
+    * intermediate blowup, and the output stays hash-partitioned on
+    * `entityKey` for whatever groups by it next.
     *
     * Duplicate-tombstone tie rule (pinned to the reference): the reference
     * ranks the deletes×versions join `PARTITION BY (key, changeDate)`
     * (`0-merge_delete_query.sql:27-41`), so several tombstones sharing
-    * (key, ts) produce ONE resurrected row, not one each. The tombstone
-    * projection here is (key, op, ts) — duplicates are identical rows — so
-    * a `distinct()` reproduces that collapse exactly.
+    * (key, ts) produce ONE resurrected row, not one each. They sort next to
+    * each other, so every one but the first drops (`lag`).
     *
     * @param tiebreakCol version-side column breaking ts ties (highest wins)
     */
@@ -146,24 +159,19 @@ object AsOfJoin {
       deleteValue: String,
       payloadCols: Seq[String],
       tiebreakCol: String): DataFrame = {
-    val deletes = df.filter(col(opCol) === deleteValue)
-      .select(entityKey, opCol, tsCol)
-      .distinct() // collapse duplicate (key, ts) tombstones — see tie rule
-    val versions = df.filter(col(opCol) =!= deleteValue)
-      .select((Seq(entityKey, tsCol, tiebreakCol) ++ payloadCols)
-        .distinct.map(col): _*)
-      .withColumnRenamed(tsCol, "__vts")
-
-    val resurrected = asOf(deletes, versions,
-        keys = Seq((entityKey, entityKey)),
-        leftTs = tsCol, rightTs = "__vts",
-        tiebreak = Seq(tiebreakCol))
-      .select((Seq(entityKey, opCol, tsCol) ++ payloadCols).map(col): _*)
-
-    val survivors = df.filter(col(opCol) =!= deleteValue)
-      .select((Seq(entityKey, opCol, tsCol) ++ payloadCols).map(col): _*)
-
-    resurrected.unionByName(survivors)
+    val isDelete = col(opCol) === deleteValue
+    val byKey = Window.partitionBy(entityKey)
+      .orderBy(col(tsCol), isDelete, col(tiebreakCol))
+    val latest = last(when(!isDelete, struct(payloadCols.map(col): _*)),
+      ignoreNulls = true)
+      .over(byKey.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    val repeatsTombstone = lag(isDelete, 1, false).over(byKey) &&
+      (lag(col(tsCol), 1).over(byKey) <=> col(tsCol))
+    df.filter(col(opCol).isNotNull)
+      .select(col("*"), latest.as("__m"), repeatsTombstone.as("__dup"))
+      .filter(!isDelete || (col("__m").isNotNull && !col("__dup")))
+      .select(Seq(col(entityKey), col(opCol), col(tsCol)) ++ payloadCols.map(c =>
+        when(isDelete, col(s"__m.$c")).otherwise(col(c)).as(c)): _*)
   }
 
   /** NEAREST-event join (pandas `merge_asof(direction='nearest')`

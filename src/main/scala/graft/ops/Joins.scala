@@ -23,20 +23,11 @@ object Joins {
   /** J3: activity filter kept as a plain INNER join — NOT a semi-join —
     * because the reference's id list can carry duplicates and the inner join
     * deliberately amplifies (`2-basedata_df_query.sql:9-15`, SURVEY §7
-    * hard-point 3). Use [[semiFilter]] when dedup semantics are wanted.
+    * hard-point 3). Where dedup semantics are wanted, a `left_semi` join
+    * never amplifies.
     */
-  def innerActivityFilter(left: DataFrame, ids: DataFrame, cond: Column): DataFrame =
-    left.join(ids, cond, "inner")
-
-  /** J3 variant joining on same-named columns. */
   def innerActivityFilter(left: DataFrame, ids: DataFrame, usingColumns: Seq[String]): DataFrame =
     left.join(ids, usingColumns, "inner")
-
-  /** The intent-variant of J3: `LEFT SEMI` never amplifies and lets Spark
-    * ship only the key column — the right call when ids are known unique.
-    */
-  def semiFilter(left: DataFrame, ids: DataFrame, cond: Column): DataFrame =
-    left.join(ids, cond, "left_semi")
 
   /** J4/J5: left join to a pre-aggregated counter table, null → 0 on the
     * counter columns (`COALESCE(cnt,0)`, `2-basedata_df_query.sql:50-63`).

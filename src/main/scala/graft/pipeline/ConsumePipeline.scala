@@ -67,7 +67,8 @@ object ConsumeParams {
   * classifiedId), so Catalyst reuses one hash-partitioning across the
   * dedup window, the enrichment joins, and the aggregations; the only
   * broadcast is the small geo lookup. At 100 TB the CDC repair and day-dedup
-  * dominate — both are single-shuffle ops on the entity key.
+  * dominate — both run over the repair window's one shuffle on the entity
+  * key.
   */
 object ConsumePipeline {
 
@@ -130,22 +131,10 @@ object ConsumePipeline {
     }
   }
 
-  /** The user_id cache alignment, HOISTED to the repaired stream (r14).
-    *
-    * History: r3–r13 aligned per iteration — `enrich(...)
-    * .repartition(user_id).cache()` — because stage 1's window leaves a
-    * (user_id, day) layout that satisfies none of stage 3's user_id
-    * requirements. That paid one REPARTITION_BY_COL exchange PER
-    * ITERATION plus the window's own (user_id, day) ENSURE exchange.
-    * Aligning the REPAIRED stream instead exploits the subset rule:
-    * `hashpartitioning(user_id)` satisfies the day-dedup window's
-    * `ClusteredDistribution(user_id, day)`, so the window's ENSURE
-    * exchange disappears, the iteration tagging and the broadcast side
-    * joins preserve the layout, and every stage-3 window — keyed by
-    * `user_id` or by `(iteration, user_id)` — is satisfied by it, so stage
-    * 3 stays shuffle-free (PlanAuditSpec pins it). Net plan: 1
-    * REPARTITION_BY_COL total where there were 1 ENSURE + one
-    * REPARTITION_BY_COL per iteration.
+  /** The repaired stream hash-partitioned on `user_id`. [[frames]] does
+    * not call it: [[repairCdc]]'s window already leaves that layout, which
+    * satisfies stage 1's `(user_id, day)` window and every stage-3 window.
+    * The benchmark's traced mode (`perfbench`) calls it.
     */
   def alignRepaired(repaired: DataFrame): DataFrame =
     repaired.repartition(col("user_id"))
@@ -221,8 +210,8 @@ object ConsumePipeline {
     *
     * The reference re-runs stages 1–3 per (country × distribution) loop row
     * (`script/main.py:305-346`). Here every stage runs once for all
-    * iterations: stage 1 runs over the [[alignRepaired]] stream, and each
-    * of its rows is tagged with the name of every iteration whose filter it
+    * iterations: stage 1 runs over the repaired stream, and each of its
+    * rows is tagged with the name of every iteration whose filter it
     * matches (`explode`, so a row matching two overlapping filters appears
     * under both). Stage 2 runs on the tagged rows, stage 3 is keyed by
     * `(iteration, user_id)` so each iteration's invalid-id rule and price
@@ -239,7 +228,7 @@ object ConsumePipeline {
     val side = SideInputs(Tables.orders(spark, dir), events,
       params.activityFrom, params.activityTo)
     val tags = params.iterations.map(it => when(it.filter, lit(it.name)))
-    val base1 = baseFirst(alignRepaired(repairCdc(events)), Tables.customer(spark, dir))
+    val base1 = baseFirst(repairCdc(events), Tables.customer(spark, dir))
       .withColumn("iteration", explode(filter(array(tags: _*), _.isNotNull)))
     val b3 = baseFinal(enrich(base1, side), params.monthStart, params.monthEnd,
       keys = Seq(col("iteration"), col("user_id")))
@@ -254,7 +243,7 @@ object ConsumePipeline {
     * cache/unpersist lifecycle (`script/main.py:125,324,370`). A plan the
     * caller already cached is read, never cached or released here.
     *
-    * The CDC stream is cached because the repair's branches and the fused
+    * The CDC stream is cached because the repair's window and the fused
     * side aggregation both read it (C1); the output because the caller
     * runs several actions on it, like the reference's per-iteration loop
     * body (`script/main.py:305-393`): the first action builds the output

@@ -50,11 +50,11 @@ object ConsumeSqlPipeline {
       "extra_columns_with_prefix" -> extraCols.map("b." + _).mkString(", ")))
     // cached across the iteration loop — the reference caches its cleaned
     // CDC table the same way (script/main.py:125). Repartitioned on
-    // user_id BEFORE the cache (r14, ConsumePipeline.alignRepaired): the
-    // stage-1 window's (user_id, day) clustering is satisfied by the
-    // user_id layout (subset rule), so the window adds no exchange, the
-    // hoisted base1 view caches aligned, and the per-iteration base2
-    // repartition this mode used to pay is gone.
+    // user_id BEFORE the cache: the template's union leaves no known layout,
+    // and the stage-1 window's (user_id, day) clustering is satisfied by
+    // the user_id layout (subset rule), so the window adds no exchange and
+    // the hoisted base1 view caches aligned. (The DataFrame path gets the
+    // same layout from its repair window, with no repartition.)
     CacheScope.cache(spark.sql(q0).repartition(col("user_id")))
       .createOrReplaceTempView("graft_repaired")
 

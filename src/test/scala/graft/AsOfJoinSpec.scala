@@ -59,6 +59,35 @@ class AsOfJoinSpec extends SparkSpec {
     assert(out.count() == 3) // 1 survivor + 2 resurrected
   }
 
+  test("resurrectDeletes is one window pass: no join, union or aggregate, one exchange") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val physical: SparkPlan = AsOfJoin.resurrectDeletes(cdc, "k", "op", "ts", "Delete",
+          payloadCols = Seq("value", "props"), tiebreakCol = "id")
+        .queryExecution.executedPlan
+      val extra = physical.collect {
+        case p @ (_: BaseJoinExec | _: UnionExec | _: BaseAggregateExec) => p.nodeName
+      }
+      assert(extra.isEmpty, s"the repair plans ${extra.mkString(", ")}:\n$physical")
+      assert(physical.collect { case w: WindowExec => w }.size == 1,
+        s"expected one window:\n$physical")
+      val exchanges = physical.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+      val keyedOnEntity = exchanges.collect {
+        case HashPartitioning(Seq(a: Attribute), _) if a.name == "k" => a
+      }
+      assert(exchanges.size == 1 && keyedOnEntity.size == 1,
+        s"expected exactly one exchange, keyed on the entity:\n$physical")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
   test("asOf picks latest right row at-or-before each left row") {
     val left = Seq((100L, "u1", ts("2024-01-02 12:00:00"))).toDF("lid", "k", "lts")
     val right = Seq(

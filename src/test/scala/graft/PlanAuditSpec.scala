@@ -126,45 +126,60 @@ class PlanAuditSpec extends SparkSpec {
 
   test("consume pipeline: stage 3 runs shuffle-free over the aligned cache (exchange audit)") {
     // Stage 3 is one pass of windows keyed by (iteration, user_id): the
-    // invalid-id maxima and both price-history row numbers. Aligning the
-    // repaired stream on user_id (ConsumePipeline.alignRepaired) makes that
-    // REPARTITION_BY_COL the only user_id exchange the stages above it
-    // need: stage 1's day-dedup window, the stage-3 windows and everything
-    // up to modify's output run over that layout. Machine-checked on the
-    // executed plan of pipe_consume_e2e:
-    //  (a) it holds exactly one REPARTITION_BY_COL exchange and no
-    //      exchange keyed on `iteration`, and
-    //  (b) no shuffle exchange sits between that alignment exchange and
-    //      any window above it or the plan's root (modify's output).
+    // invalid-id maxima and both price-history row numbers. The CDC
+    // repair's window (AsOfJoin.resurrectDeletes) hash-partitions the
+    // stream on user_id, and that exchange is the only user_id exchange
+    // the stages above it need: the repair window, stage 1's day-dedup
+    // window, the stage-3 windows and everything up to modify's output run
+    // over that layout. Machine-checked on the executed plan of
+    // pipe_consume_e2e:
+    //  (a) it holds no REPARTITION_BY_COL exchange and no exchange keyed
+    //      on `iteration`, and
+    //  (b) no shuffle exchange sits between the repair window's user_id
+    //      exchange and any window above it or the plan's root (modify's
+    //      output).
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, NamedExpression}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.window.WindowExec
-    def isAlignment(p: SparkPlan) = p match {
-      case s: ShuffleExchangeExec => s.shuffleOrigin == REPARTITION_BY_COL
-      case _ => false
-    }
-    // the nodes from `p` down to (not including) the alignment exchange
-    def pathToAlignment(p: SparkPlan): Option[Seq[SparkPlan]] =
-      if (isAlignment(p)) Some(Nil)
-      else p.children.iterator.flatMap(pathToAlignment).nextOption().map(p +: _)
+    // the nodes from `p` down to (not including) `anchor`
+    def pathTo(anchor: SparkPlan)(p: SparkPlan): Option[Seq[SparkPlan]] =
+      if (p eq anchor) Some(Nil)
+      else p.children.iterator.flatMap(pathTo(anchor)).nextOption().map(p +: _)
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try withProductionInputs {
       val physical = SparkEntry.queries("pipe_consume_e2e")(spark, sf)
         .queryExecution.executedPlan
-      assert(physical.collect { case p if isAlignment(p) => p }.size == 1,
-        s"expected exactly one user_id alignment exchange:\n$physical")
+      val shuffles = physical.collect { case s: ShuffleExchangeExec => s }
+      assert(!shuffles.exists(_.shuffleOrigin == REPARTITION_BY_COL),
+        s"the pipeline repartitions explicitly:\n$physical")
       assert(!physical.toString.contains("Exchange hashpartitioning(iteration"),
         s"stage 3 re-shuffles on its iteration key:\n$physical")
+      // the repair window is the one carrying the latest version (`__m`)
+      val repair = physical.collect {
+        case w: WindowExec if w.windowExpression.exists {
+          case n: NamedExpression => n.name == "__m"
+          case _ => false
+        } => w
+      }
+      assert(repair.size == 1, s"expected one CDC repair window:\n$physical")
+      val anchor = repair.head.collectFirst { case s: ShuffleExchangeExec => s }
+        .getOrElse(fail(s"the repair window has no exchange below it:\n$physical"))
+      assert((anchor.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), _) => a.name == "user_id"
+        case _ => false
+      }), s"the repair window's exchange is not keyed on user_id alone:\n$anchor")
       val above = (physical +: physical.collect { case w: WindowExec => w })
-        .flatMap(n => pathToAlignment(n).map(n -> _))
-      // the root, stage 1's day-dedup window and stage 3's three windows
-      // (the CDC repair's window runs below the alignment)
-      assert(above.size == 5, s"expected 4 windows above the alignment:\n$physical")
+        .flatMap(n => pathTo(anchor)(n).map(n -> _))
+      // the root, the repair window, stage 1's day-dedup window and stage
+      // 3's three windows
+      assert(above.size == 6, s"expected 5 windows above the repair exchange:\n$physical")
       above.foreach { case (node, path) =>
-        val shuffles = path.collect { case s: ShuffleExchangeExec => s }
-        assert(shuffles.isEmpty,
-          s"${node.nodeName} re-shuffles the aligned stream:\n${shuffles.mkString("\n")}")
+        val reshuffles = path.collect { case s: ShuffleExchangeExec => s }
+        assert(reshuffles.isEmpty,
+          s"${node.nodeName} re-shuffles the repaired stream:\n${reshuffles.mkString("\n")}")
       }
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }

@@ -122,6 +122,72 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  // --- resurrectDeletes matches a naive per-key reference -----------------
+
+  /** (key, op, ts, value, props): ops are "V" (version), "D" (tombstone) or
+    * null; ts from a narrow range so versions and tombstones tie; key 4
+    * only ever holds tombstones. Tiebreak ids are added by the test.
+    */
+  private val cdcCase: Gen[List[(Int, Option[String], Int, Option[Int], Option[String])]] =
+    for {
+      n <- Gen.choose(0, 30)
+      rows <- Gen.listOfN(n, for {
+        k <- Gen.choose(0, 3)
+        op <- Gen.frequency(5 -> Gen.const(Option("V")),
+          4 -> Gen.const(Option("D")), 1 -> Gen.const(Option.empty[String]))
+        ts <- Gen.choose(0, 6)
+        v <- Gen.option(Gen.choose(0, 99))
+        p <- Gen.option(Gen.oneOf("a", "b", "c"))
+      } yield (k, op, ts, v, p))
+      nOnly <- Gen.choose(0, 3)
+      onlyTombstones <- Gen.listOfN(nOnly, Gen.choose(0, 6)
+        .map(ts => (4, Option("D"), ts, Option.empty[Int], Option.empty[String])))
+    } yield rows ++ onlyTombstones
+
+  test("property: resurrectDeletes equals the naive reference") {
+    samples(cdcCase, 30).zipWithIndex.foreach { case (raw, i) =>
+      // unique tiebreak ids, in an order unrelated to the row order
+      val ids = new scala.util.Random(i).shuffle(raw.indices.toList)
+      val rows = raw.zip(ids).map { case ((k, op, ts, v, p), id) =>
+        (k, op, ts, v, p, id)
+      }
+      val df = rows.map { case (k, op, ts, v, p, id) =>
+        (k, op, new java.sql.Timestamp(ts * 1000L), v, p, id)
+      }.toDF("k", "op", "ts", "value", "props", "id")
+      // the consume job carries the tiebreak column too; j1 does not
+      val payload = if (i % 2 == 0) Seq("value", "props", "id") else Seq("value", "props")
+
+      val got = graft.ops.AsOfJoin.resurrectDeletes(df, "k", "op", "ts", "D",
+          payloadCols = payload, tiebreakCol = "id")
+        .collect().toSeq
+        .map(r => r.toSeq.map(Option(_)).map {
+          case Some(t: java.sql.Timestamp) => Some(t.getTime / 1000L)
+          case o => o
+        })
+
+      // per key: every version as it is, plus one row per distinct tombstone
+      // ts carrying the payload of the latest version at or before it
+      // (highest id on a ts tie); tombstones with no such version and
+      // null-op rows drop
+      val expected = rows.groupBy(_._1).toSeq.flatMap { case (k, rs) =>
+        val versions = rs.filter(_._2.contains("V"))
+        val resurrected = rs.filter(_._2.contains("D")).map(_._3).distinct
+          .flatMap { t =>
+            versions.filter(_._3 <= t).maxByOption(v => (v._3, v._6))
+              .map(v => (k, "D", t, v._4, v._5, v._6))
+          }
+        versions.map { case (_, _, ts, v, p, id) => (k, "V", ts, v, p, id) } ++
+          resurrected
+      }.map { case (k, op, ts, v, p, id) =>
+        Seq(Some(k), Some(op), Some(ts.toLong), v, p) ++
+          (if (payload.contains("id")) Seq(Some(id)) else Nil)
+      }
+      assert(got.groupBy(identity).view.mapValues(_.size).toMap ==
+        expected.groupBy(identity).view.mapValues(_.size).toMap,
+        s"rows=$rows payload=$payload")
+    }
+  }
+
   // --- sniffImage total on arbitrary bytes ----------------------------------
 
   test("property: sniffImage never throws — garbage, truncations, forged magics") {
